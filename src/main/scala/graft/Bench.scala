@@ -429,7 +429,6 @@ object Bench {
       onlySubset.forall(_.exists(
         SparkEntry.prewarmQueries.getOrElse(family, Set.empty)))
     val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.plans.GraftSparkExtensions")
       .master(s"local[$cpus]")
       .appName("graft-bench")
       .config("spark.sql.shuffle.partitions", cpus)

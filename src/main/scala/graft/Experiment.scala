@@ -20,7 +20,6 @@ object Experiment {
     val k = args.lift(1).map(_.toInt).getOrElse(10)
     val runs = args.lift(2).map(_.toInt).getOrElse(5)
     val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.plans.GraftSparkExtensions")
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
       .appName("graft-experiment")
       .config("spark.sql.shuffle.partitions",

@@ -12,7 +12,6 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.tail.toSeq else Seq("knn_ivf_full", "q03_region_revenue")
     val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.plans.GraftSparkExtensions")
       .master("local[8]")
       .appName("graft-explain")
       .config("spark.sql.shuffle.partitions", "8")

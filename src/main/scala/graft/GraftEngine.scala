@@ -513,7 +513,6 @@ object GraftEngine {
     * sets the same confs minus master). */
   def localSession(cores: Int = 8, appName: String = "graft"): SparkSession =
     SparkSession.builder()
-      .config("spark.sql.extensions", "graft.plans.GraftSparkExtensions")
       .master(s"local[$cores]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cores.toString)

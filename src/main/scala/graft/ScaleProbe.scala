@@ -74,7 +74,6 @@ object ScaleProbe {
     val spark = SparkSession.builder()
       .appName("graft-scale-probe")
       .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftSparkExtensions")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -186,12 +186,6 @@ object SparkEntry {
         KnnExact.queryVector(emb, 0L), TopK, AnnProbe,
         col("label") === FilterLabel)
     }),
-    "knn_rule_probe"         -> ((s, d) => {
-      // same search as ann_ivf_probe, but composed by the Catalyst rewrite
-      // rule (KnnSearchRewrite) from a KnnSearchNode instead of the API layer
-      val idx = IvfIndex.forSfDir(s, d, NumClusters)
-      idx.knn(KnnExact.queryVector(tbl(s, d, "embeddings"), 0L), TopK, AnnProbe)
-    }),
     "ann_ivf_batch"          -> ((s, d) => {
       // batched IVF serving: one pruned union scan for the whole query batch
       val emb = tbl(s, d, "embeddings")
@@ -366,7 +360,7 @@ object SparkEntry {
       // span-lake artifacts (ingest sink + compaction view — what
       // spanWindowStream accumulates); the row pays position recovery +
       // rewrite for the affected ~8% of docs plus the pass-through. Output
-      // row-identical to Dedup.scrubDupSpans (AbScrub sf10 parity;
+      // row-identical to Dedup.scrubDupSpans (sf10 parity in BASELINE.md;
       // DedupTextSpec pins it at fixture scale); oracle replays from source
       Dedup.scrubDupSpansPrebuilt(tbl(s, d, "documents"),
         graft.sources.SpanWindowLake.windows(s, d),
@@ -837,8 +831,8 @@ object SparkEntry {
     * names) and the legacy heuristics (no silently dropped member). */
   val prewarmQueries: Map[String, Set[String]] = {
     val ivfServing = Set(
-      "knn_exact", "knn_batch", "knn_ivf_full", "knn_rule_probe",
-      "ann_ivf_probe", "ann_ivf_batch", "ann_filtered",
+      "knn_exact", "knn_batch", "knn_ivf_full", "ann_ivf_probe",
+      "ann_ivf_batch", "ann_filtered",
       "ann_sq8", "ann_pq", "ann_bq",
       "ann_lsh", "ann_lsh_bucket", "ann_lsh_indexed",
       "ivf_cluster_counts", "ivf_merge_counts", "ivf_assign_new",
@@ -913,29 +907,18 @@ object SparkEntry {
     CacheRegistry.release()
   }
 
-  /** Exact k-NN (reference at nProbe=128): scan → codegen cosine → top-k.
-    * Rounded-sim total order (sim DESC, vec_id ASC) so oracle LIMIT boundaries
-    * agree across engines. */
+  /** Exact k-NN (reference at nProbe=128): scan → codegen cosine → top-k
+    * under the engine's rank contract ([[KnnExact.topK]]). */
   private def knnExact(s: SparkSession, sfDir: String): DataFrame = {
     val emb = tbl(s, sfDir, "embeddings")
-    val qv = KnnExact.queryVector(emb, 0L)
-    emb.withColumn("sim", round(cosineSim(col("embedding"), typedLit(qv)), 6))
-      .orderBy(desc("sim"), asc("vec_id")).limit(TopK)
-      .select(col("vec_id"), col("label"), col("sim"))
+    KnnExact.topK(emb, KnnExact.queryVector(emb, 0L), TopK)
   }
 
   /** IVF two-phase query (IVF.cpp:267-435): coarse top-nProbe centroids on the
     * driver, partition-pruned fine scan, top-k. nProbe=NumClusters ⇒ exact. */
-  private def knnIvf(s: SparkSession, sfDir: String, nProbe: Int): DataFrame = {
-    val idx = IvfIndex.forSfDir(s, sfDir, NumClusters)
-    val qv = KnnExact.queryVector(tbl(s, sfDir, "embeddings"), 0L)
-    val probes = idx.coarseProbes(qv, nProbe)
-    idx.vectors
-      .where(col("cluster").isin(probes: _*))
-      .withColumn("sim", round(cosineSim(col("embedding"), typedLit(qv)), 6))
-      .orderBy(desc("sim"), asc("vec_id")).limit(TopK)
-      .select(col("vec_id"), col("label"), col("sim"))
-  }
+  private def knnIvf(s: SparkSession, sfDir: String, nProbe: Int): DataFrame =
+    IvfIndex.forSfDir(s, sfDir, NumClusters)
+      .search(KnnExact.queryVector(tbl(s, sfDir, "embeddings"), 0L), TopK, nProbe)
 
   // ------------------------------------------------------------ oracles
 
@@ -953,8 +936,7 @@ object SparkEntry {
        |ORDER BY sim DESC, e.vec_id ASC
        |LIMIT $TopK""".stripMargin
 
-  /** IVF probe replay oracle, shared by `ann_ivf_probe` (API composition) and
-    * `knn_rule_probe` (Catalyst-rule composition): coarse over the exported
+  /** IVF probe replay oracle for `ann_ivf_probe`: coarse over the exported
     * centroid table, fine over the exported assignment join. Export paths
     * come in through the explicit [[OracleCtx]], so the render is a pure
     * function of the requested config — no ran-first singleton state. */
@@ -1507,8 +1489,6 @@ object SparkEntry {
     "ann_ivf_probe" -> IvfProbeOracle(ctx),
     "ivf_tuned_probe" -> IvfTunedProbeOracle(ctx),
     "ann_filtered" -> ivfProbeOracleWhere(ctx, s"e.label = $FilterLabel"),
-    // the rule-composed plan must produce the identical result
-    "knn_rule_probe" -> IvfProbeOracle(ctx),
 
     "ivf_cluster_counts" ->
       s"""SELECT cluster, COUNT(*) AS n_vectors

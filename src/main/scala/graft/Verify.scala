@@ -20,7 +20,6 @@ object Verify {
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.plans.GraftSparkExtensions")
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       // joins planned like the bench (guide §3.1 — correctness must be

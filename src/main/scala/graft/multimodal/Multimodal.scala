@@ -483,7 +483,7 @@ object Multimodal {
     // classes enter the banded join, which cuts the Σ pop² candidate work
     // to Σ soloPop·pop — measured at sf10 (2.32M classes, 37% multi):
     // 1.32G → 617M, with the probe-side band explosion down 9.3M → 5.9M
-    // rows (AbPhashCensus; the sub-band recursion alternative measured
+    // rows (BASELINE.md; the sub-band recursion alternative measured
     // 884M for a 4× key explosion and was rejected — the dense tail-frame
     // ball's variation sits inside one sub-band, so it will not split).
     // The probe's multiplicity must come from the CORPUS-side class table:
@@ -677,7 +677,7 @@ object Multimodal {
     * ([[graft.sources.IncrementalHistory.phashClassesMerged]]) instead of
     * re-running the merge inside every probe of every pass — at sf10 the
     * per-pass merge + quotient cache fill was ~1.8 s of the committed
-    * 8.11 s row (AbFrameDupInc). The batch still sketches itself (the
+    * 8.11 s row (BASELINE.md). The batch still sketches itself (the
     * O(batch) probe contract). Output ≡ [[frameDupShareIncremental]] ≡
     * full recompute restricted to batch docs (PhashSpec pins the chain);
     * `historySketches` feeds only the debug disjointness assertion. */

@@ -11,9 +11,7 @@ import org.apache.spark.sql.functions._
   *
   * Each round is two grouped aggregations + joins keyed by node id — the
   * same shuffle shapes as the propagation loop, just fewer rounds. Edges are
-  * persisted per round (lineage truncation — see [[Dedup.nearDupClusters]]'s
-  * original loop for why — with the round fingerprint computed through the
-  * cache fill, one action per round; see [[run]]).
+  * localCheckpoint'ed per round (lineage truncation — see [[run]]).
   *
   * Operations (on the undirected edge set):
   *  - large-star(u): connect every STRICTLY LARGER neighbor of u to
@@ -52,17 +50,13 @@ object ConnectedComponents {
     * (doc_id, cluster_rep) for every node with ≥1 edge, cluster_rep = the
     * component's minimum node id (component minima label themselves).
     *
-    * One ACTION per round (r20, verdict r19 #1): each round used to pay a
-    * localCheckpoint materialization job PLUS a separate fingerprint
-    * aggregate job. The round's edges are now `persist()`ed and the
-    * fingerprint aggregate runs THROUGH the cache — one job fills the cache
-    * and computes the set signature, and the InMemoryRelation truncates the
-    * planning lineage exactly the way the checkpoint did (later rounds plan
-    * against the cached relation, never the whole round history). The
-    * superseded round's cache is dropped as soon as its successor is
-    * materialized, so live storage stays ONE round's quotient edges; the
-    * final round stays cached for the caller's joins (the same lifetime the
-    * checkpointed RDD had). */
+    * Each round's edges are `localCheckpoint()`ed: the round then plans
+    * against a leaf RDD scan, so the plan of round r+1 is the same size as
+    * round 1's. A `persist()` does NOT cut the plan: the cached relation is
+    * substituted only after the whole logical plan has been analyzed, and
+    * every round's plan embeds its predecessor's twice (the symmetric
+    * union), so analysis and cache lookup grow exponentially in the round
+    * count (ConnectedComponentsSpec's plan-size guard pins this). */
   def run(pairs: DataFrame, maxRounds: Int = 30): DataFrame = {
     // canonical storage is (u = larger endpoint, v = smaller): at the fixed
     // point every edge reads (member, componentMin), and the per-round set
@@ -73,7 +67,7 @@ object ConnectedComponents {
       .select(greatest(col("u"), col("v")).as("u"),
         least(col("u"), col("v")).as("v"))
       .distinct()
-      .persist()
+      .localCheckpoint()
     var prevFp = fingerprint(edges)
     var converged = false
     var rounds = 0
@@ -100,11 +94,10 @@ object ConnectedComponents {
         .select(greatest(col("n"), col("m")).as("u"),
           least(col("n"), col("m")).as("v"))
         .distinct()
-        .persist()
-      val fp = fingerprint(ss) // fills ss's cache + signature, one job
+        .localCheckpoint()
+      val fp = fingerprint(ss)
       converged = fp == prevFp
       prevFp = fp
-      edges.unpersist(blocking = false) // ss is materialized; drop its input
       edges = ss
       rounds += 1
     }

@@ -297,7 +297,7 @@ object Dedup {
     * from one artifact semi-join, and only they (8.3% at sf10) pay position
     * recovery + rewrite; untouched docs take the anti-join pass-through
     * with a single counting tokenize. Output is row-identical to
-    * [[scrubDupSpans]] (AbScrub parity-pinned over 500k sf10 docs;
+    * [[scrubDupSpans]] (parity-pinned over 500k sf10 docs, BASELINE.md;
     * DedupTextSpec pins it at fixture scale): the positional windows of an
     * affected doc are a deterministic function of its text, and every doc
     * with a covered position is affected by construction, so restricting
@@ -936,7 +936,7 @@ object Dedup {
     * prefix rule is sound under every shared total order — the sketch only
     * buys selectivity), so swapping the union sketch for the stored
     * history-only one changes candidate COUNT, never the verified pairs.
-    * Measured at sf10 (AbClustInc, quiet window): history-side prefix scan
+    * Measured at sf10 (BASELINE.md, quiet window): history-side prefix scan
     * 1.3-1.5 s + union sketch 0.8-1.0 s move to refresh; candidates 1.64M
     * under either sketch (union vs history-only) for 2200 verified pairs.
     * Exact-df ordering was measured too (503k candidates, 3.25× fewer) and

@@ -86,41 +86,20 @@ final case class IvfIndex(
       .orderBy(col("cluster"))
   }
 
-  /** [[KnnSearchNode]]-based search: same coarse-prune-fine plan as [[search]],
-    * but composed by the Catalyst rewrite rule ([[graft.plans.KnnSearchRewrite]],
-    * SURVEY §4 item 2) instead of the API layer. Requires the session to carry
-    * [[graft.plans.GraftSparkExtensions]] (`spark.sql.extensions`). */
-  def knn(query: Array[Float], k: Int, nProbe: Int): DataFrame =
-    graft.plans.KnnSearchNode.dataFrame(spark, vectors, centroids, query, k, nProbe)
-
   /** Quantized IVF search — BOTH scale paths composed: partition pruning cuts
     * the scanned fraction to nProbe/k, int8 codes cut the scanned bytes 4×.
     * The quantizer ([[SqQuant]]) is trained on the full index (stable codebook
-    * regardless of probe set); the fine scan dequantizes codes and ranks by
-    * double cosine. This is what the fine phase of a 100 TB deployment
+    * regardless of probe set); the fine scan is [[SqQuant.search]] over the
+    * probed clusters — dequantized codes ranked by double cosine, so full
+    * probe ≡ flat SQ8. This is what the fine phase of a 100 TB deployment
     * actually scans: quantized codes inside pruned partitions. Pass
     * `codebook` ([[SqQuant.statsForSfDir]] over the same vectors) to scan
     * with literal stats — without it every call re-aggregates the index for
     * its per-dimension min/max (round-4 review item #3). */
   def searchQuantized(query: Array[Float], k: Int, nProbe: Int,
-      codebook: Option[(Array[Double], Array[Double])] = None): DataFrame = {
-    val (mns, mxs) = codebook.getOrElse(SqQuant.stats(vectors, dim))
-    val probes = coarseProbes(query, nProbe)
-    val qd = query.map(_.toDouble)
-    val qNorm = math.sqrt(qd.map(x => x * x).sum)
-    val dq = SqQuant.dequantizeCol(
-      SqQuant.quantizeCol(col("embedding"), mns, mxs), mns, mxs)
-    vectors
-      .where(col("cluster").isin(probes: _*)) // -> PartitionFilters
-      .select(col("vec_id"), col("label"),
-        explode(array(struct(dq.as("v")))).as("c"))
-      .select(col("vec_id"), col("label"),
-        round(graft.functions.GraftFunctions.dotProduct(col("c.v"), typedLit(qd)) /
-          (sqrt(graft.functions.GraftFunctions.dotProduct(col("c.v"), col("c.v"))) *
-            qNorm + 1e-8), 6).as("sim"))
-      .orderBy(desc("sim"), asc("vec_id"))
-      .limit(k)
-  }
+      codebook: Option[(Array[Double], Array[Double])] = None): DataFrame =
+    SqQuant.search(probed(query, nProbe), query, k, dim,
+      Some(codebook.getOrElse(SqQuant.stats(vectors, dim))))
 
   /** Batched IVF search — the 100 TB serving shape: amortize ONE pruned scan
     * over a whole query batch instead of one scan per query (the reference
@@ -295,7 +274,7 @@ final case class IvfIndex(
     * vector to its nearest existing centroid, then fold the batch INTO the
     * partitioned layout with one `append`-mode partitioned write: each row
     * lands in its cluster's directory, so every subsequent probe-pruned
-    * search ([[search]]/[[searchBatch]]/the Catalyst rule) sees the merged
+    * search ([[search]]/[[searchBatch]]) sees the merged
     * rows with zero change — partition pruning doesn't care which write a
     * file came from. Centroids are NOT retrained (that's [[maintain]]'s
     * rebuild arm), so post-merge counts ≡ base counts + [[assignNew]]'s
@@ -455,23 +434,21 @@ final case class IvfIndex(
     } else (this, false)
   }
 
+  /** The pruned fine-scan input (`IVF.cpp:286-435`): the inverted file
+    * restricted to the query's top-nProbe clusters — `PartitionFilters` on
+    * the scan, not a full scan. */
+  private def probed(query: Array[Float], nProbe: Int): DataFrame =
+    vectors.where(col("cluster").isin(coarseProbes(query, nProbe): _*))
+
   /** Fine search (`IVF.cpp:286-435`, both "sequential" and "combined" variants —
     * Spark's per-partition partial top-k + merge in TakeOrderedAndProject is the
-    * same algorithm as the reference's per-cluster heaps + merge).
+    * same algorithm as the reference's per-cluster heaps + merge): the exact
+    * [[KnnExact.topK]] over the probed clusters only, so the two paths share
+    * one rank contract and nProbe = numClusters is exact by construction.
     * Returns `(vec_id, label, sim)`, sim DESC, vec_id ASC (declared tie-break).
     */
-  def search(query: Array[Float], k: Int, nProbe: Int): DataFrame = {
-    val probes = coarseProbes(query, nProbe)
-    vectors
-      .where(col("cluster").isin(probes: _*)) // -> PartitionFilters, not a full scan
-      // 6-dp-rounded sim is the ENGINE-WIDE rank contract (oracle LIMIT
-      // boundaries and the Catalyst-rule path order by the same rounded
-      // value; an unrounded sort here would diverge on near-ties)
-      .withColumn("sim", round(cosineSim(col("embedding"), typedLit(query)), 6))
-      .orderBy(desc("sim"), asc("vec_id"))    // -> TakeOrderedAndProject
-      .limit(k)
-      .select(col("vec_id"), col("label"), col("sim"))
-  }
+  def search(query: Array[Float], k: Int, nProbe: Int): DataFrame =
+    KnnExact.topK(probed(query, nProbe), query, k)
 
   /** Filtered ANN — [[search]] with a metadata predicate applied INSIDE the
     * pruned scan (the vector-DB "filtered search" / pre-filter form): the
@@ -481,24 +458,16 @@ final case class IvfIndex(
     * instead return < k rows whenever the predicate thins the neighborhood.
     * The predicate must reference the layout's columns (e.g. `label`). */
   def searchFiltered(query: Array[Float], k: Int, nProbe: Int,
-      predicate: org.apache.spark.sql.Column): DataFrame = {
-    val probes = coarseProbes(query, nProbe)
-    vectors
-      .where(col("cluster").isin(probes: _*))
-      .where(predicate)
-      .withColumn("sim", round(cosineSim(col("embedding"), typedLit(query)), 6))
-      .orderBy(desc("sim"), asc("vec_id"))
-      .limit(k)
-      .select(col("vec_id"), col("label"), col("sim"))
-  }
+      predicate: org.apache.spark.sql.Column): DataFrame =
+    KnnExact.topK(probed(query, nProbe).where(predicate), query, k)
 }
 
 object IvfIndex {
 
   /** Coarse search (`IVF.cpp:271-282`) as a pure function: top-nProbe
     * centroids by cosine against the query, driver-local over k rows. Shared
-    * by the API path ([[IvfIndex.coarseProbes]]) and the Catalyst rewrite
-    * ([[graft.plans.KnnSearchRewrite]]) so both compute identical probe sets. */
+    * by the point path ([[IvfIndex.coarseProbes]]) and the recall curve, so
+    * both compute identical probe sets. */
   def coarseProbes(
       centroids: Seq[(Int, Array[Float])],
       query: Array[Float],
@@ -842,29 +811,4 @@ object KnnBatch {
     graft.functions.TopKStructAgg.perGroupTopK(
       scored, "query_id", col("sim"), col("vec_id"), col("label"), k)
   }
-}
-
-/** Exact (brute-force) k-NN — the reference at nProbe = numClusters, and the
-  * correctness baseline for the IVF path (`README.md:24`: n_probe=128 ⇒ exact). */
-object KnnExact {
-
-  /** Top-k by cosine over the full embedding table.
-    * Plan shape: parquet scan → codegen'd cosine projection → TakeOrderedAndProject
-    * (per-partition bounded heaps + driver merge — the reference's own top-k
-    * algorithm at `IVF.cpp:185-263`, distributed).
-    */
-  def topK(embeddings: DataFrame, query: Array[Float], k: Int): DataFrame =
-    embeddings
-      // same 6-dp rounded rank contract as IvfIndex.search / LshAnn / SqQuant
-      .withColumn("sim", round(cosineSim(col("embedding"), typedLit(query)), 6))
-      .orderBy(desc("sim"), asc("vec_id"))
-      .limit(k)
-      .select(col("vec_id"), col("label"), col("sim"))
-
-  /** Fetch the query vector by id — queries are data, not code (SURVEY §1.3):
-    * a 1-row lookup collected to the driver as the query parameter. */
-  def queryVector(embeddings: DataFrame, vecId: Long): Array[Float] =
-    embeddings.where(col("vec_id") === vecId)
-      .select(col("embedding")).head()
-      .getAs[Seq[Float]](0).toArray
 }

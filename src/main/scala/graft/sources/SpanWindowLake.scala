@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * set, the [[FrameSketchLake.classes]] posture, span edition). The
   * rewrite itself — position recovery, mask, reassembly — stays in the
   * query: it is the work the row exists to measure, confined to affected
-  * docs. Measured at sf10 (AbScrub, parity-exact over 500k docs):
+  * docs. Measured at sf10 (BASELINE.md; parity-exact over 500k docs):
   * 10.8 → 4.4-5.4 s warm, with the refresh costs 2.3 s (windows) + 2.1 s
   * (dupHashes) moved to prewarm.
   *

@@ -1,23 +1,13 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Column ⇄ Expression and Dataset ⇄ LogicalPlan bridge. Spark 4 made the
-  * classic `Column(Expression)` constructor and `Dataset.ofRows` private[sql]
-  * (Column now wraps a ColumnNode); third-party expression/plan libraries
-  * bridge via a same-package shim. This is the only file outside the `graft`
-  * namespace.
+/** Column ⇄ Expression bridge. Spark 4 made the classic `Column(Expression)`
+  * constructor private[sql] (Column now wraps a ColumnNode); third-party
+  * expression libraries bridge via a same-package shim. This is the only
+  * file outside the `graft` namespace.
   */
 object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
-
-  /** The analyzed logical plan of a DataFrame (custom-plan composition input). */
-  def analyzedPlan(df: Dataset[Row]): LogicalPlan =
-    df.asInstanceOf[classic.Dataset[Row]].queryExecution.analyzed
-
-  /** Wrap a custom logical plan as a DataFrame. */
-  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
-    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 }

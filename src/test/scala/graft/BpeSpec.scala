@@ -7,7 +7,7 @@ import graft.operators.Bpe
 /** Iterative BPE training: distributed result ≡ single-node reference, greedy
   * merge-fold semantics, and the merge-application property (replaying the
   * learned rules in order reproduces the distributed symbol table). */
-class BpeSpec extends SparkSpec {
+class BpeSpec extends SparkSpec with IterativeTimeLimit {
 
   import spark.implicits._
 

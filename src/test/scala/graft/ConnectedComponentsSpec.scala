@@ -5,8 +5,9 @@ import graft.operators.ConnectedComponents
 /** Validates the alternating-star connected-components against brute-force
   * union-find on random graphs, and pins the logarithmic-round property on a
   * deep path graph (the adversarial shape that defeats min-label
-  * propagation, whose round count is the diameter). */
-class ConnectedComponentsSpec extends SparkSpec {
+  * propagation, whose round count is the diameter), and that the returned
+  * plan does not grow with the round count. */
+class ConnectedComponentsSpec extends SparkSpec with IterativeTimeLimit {
   import spark.implicits._
 
   private def bruteForce(edges: Seq[(Long, Long)]): Map[Long, Long] = {
@@ -45,6 +46,26 @@ class ConnectedComponentsSpec extends SparkSpec {
     val got = run(edges, maxRounds = 15)
     assert(got.size == 200)
     assert(got.values.forall(_ == 0L), "every chain node labels to the minimum")
+  }
+
+  test("plan size is independent of the round count (per-round lineage cut)") {
+    // path graphs of 2, 3 and 16 nodes converge in 1, 2 and several star
+    // rounds. A per-round cut that truncates the plan (localCheckpoint)
+    // returns the same logical plan for each; a persist() re-embeds every
+    // earlier round (519 → 8,391 nodes from 1 to 2 rounds), so the 3-node
+    // check fails in seconds, before the 16-node run could stall in analysis
+    def planNodes(n: Long): Int = {
+      val df = ConnectedComponents.run(
+        (0L until n - 1).map(i => (i, i + 1)).toDF("src", "dst"))
+      assert(df.count() == n)
+      df.queryExecution.logical.collect { case p => p }.size
+    }
+    val oneRound = planNodes(2)
+    Seq(3L, 16L).foreach { n =>
+      val nodes = planNodes(n)
+      assert(nodes == oneRound,
+        s"plan grows with rounds: $n-node path $nodes nodes, 2-node path $oneRound")
+    }
   }
 
   test("separate components keep separate minima; isolated nodes are absent") {

@@ -33,7 +33,7 @@ import graft.operators.{Dedup, IvfIndex, KnnExact}
   * re-running the offline build (`clusters.py:20-35`) without paying a full
   * rebuild on the no-skew days.
   */
-class IncrementalDrillSpec extends SparkSpec {
+class IncrementalDrillSpec extends SparkSpec with IterativeTimeLimit {
 
   private val Days = 4
   private val artRoot = "target/drill"

@@ -119,23 +119,6 @@ class IvfSpec extends SparkSpec {
     }
   }
 
-  test("knn() Catalyst rewrite == API composition, and plans the same operators") {
-    // same (id, sim) rows at approximate probe AND at full probe
-    Seq(4, 16).foreach { p =>
-      val api = idx.search(qv, 10, p)
-        .withColumn("sim", round(col("sim"), 6))
-        .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
-      val rule = idx.knn(qv, 10, p)
-        .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
-      assert(rule == api, s"nProbe=$p: rule $rule != api $api")
-    }
-    val plan = idx.knn(qv, 10, 4).queryExecution.executedPlan.toString
-    assert(!plan.contains("KnnSearchNode"), "node must be rewritten away")
-    assert(plan.contains("TakeOrderedAndProject"), plan.take(500))
-    assert("PartitionFilters: \\[[^\\]]*cluster".r.findFirstIn(plan).isDefined,
-      "rule-built plan must partition-prune:\n" + plan.take(800))
-  }
-
   test("searchBatch: full probe == per-query exact; pruned + bounded-heap plan") {
     val queries = emb.where(col("vec_id").isin(0L, 3L))
       .selectExpr("vec_id AS query_id", "embedding")

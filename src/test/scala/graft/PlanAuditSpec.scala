@@ -47,8 +47,8 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("every IVF fine scan partition-prunes on cluster") {
-    val pruned = Seq("knn_ivf_full", "ann_ivf_probe", "knn_rule_probe",
-      "ann_ivf_batch", "ivf_sq8_probe", "ivf_pq_probe", "ann_filtered")
+    val pruned = Seq("knn_ivf_full", "ann_ivf_probe", "ann_ivf_batch",
+      "ivf_sq8_probe", "ivf_pq_probe", "ann_filtered")
     val p = plans
     pruned.foreach { name =>
       assert("PartitionFilters: \\[[^\\]]*cluster".r.findFirstIn(p(name)).isDefined,
@@ -95,8 +95,8 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("single-query top-k stays TakeOrderedAndProject (bounded heap)") {
-    val topk = Seq("knn_exact", "knn_ivf_full", "ann_ivf_probe", "knn_rule_probe",
-      "ann_lsh", "ann_lsh_indexed", "ann_sq8", "ivf_sq8_probe", "q05_top_lineitems")
+    val topk = Seq("knn_exact", "knn_ivf_full", "ann_ivf_probe", "ann_lsh",
+      "ann_lsh_indexed", "ann_sq8", "ivf_sq8_probe", "q05_top_lineitems")
     val p = plans
     topk.foreach { name =>
       assert(p(name).contains("TakeOrderedAndProject"),

@@ -4,9 +4,9 @@ import java.nio.file.{Files, Paths}
 
 import graft.sources.{BinaryVectors, JsonCorpus}
 
-/** Source ingest: the reference's own query fixtures (queries_data .bin files,
-  * 384 LE f32 each per `IVF.cpp:650-672`) and the JSON-array corpus layout
-  * (`embedding.py:26-31`). */
+/** Source ingest: the `.bin` vector format (384 LE f32 per row,
+  * `IVF.cpp:650-672`; the reference's own queries_data fixtures are checked
+  * when present) and the JSON-array corpus layout (`embedding.py:26-31`). */
 class SourcesSpec extends SparkSpec {
 
   test("reads all 5 reference query vectors: length 384, finite floats") {
@@ -47,10 +47,32 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("distributed .bin dir ingest explodes rows with stable in-file order") {
-    val df = BinaryVectors.readDir(spark, "/root/reference/queries_data", 384)
-    val rows = df.collect()
-    assert(rows.length == 5, s"5 query .bin files expected, got ${rows.length}")
-    assert(rows.forall(_.getAs[Seq[Float]]("embedding").length == 384))
+    // a .bin dir written here from seeded vectors (LE f32, `numpy.tofile`
+    // layout): 1, 2 and 4 rows per file, plus a non-.bin file the glob skips
+    val dir = Paths.get("target", "bin-ingest")
+    Files.createDirectories(dir)
+    Files.list(dir).forEach(p => Files.delete(p))
+    val rnd = new scala.util.Random(11)
+    val written = Seq(1, 2, 4).zipWithIndex.map { case (n, f) =>
+      val vecs = Array.fill(n, 384)(rnd.nextFloat() * 2 - 1)
+      val buf = java.nio.ByteBuffer.allocate(n * 384 * 4)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      vecs.foreach(_.foreach(buf.putFloat))
+      val path = dir.resolve(s"part$f.bin")
+      Files.write(path, buf.array())
+      path.toAbsolutePath.toUri.getPath -> vecs
+    }.toMap
+    Files.write(dir.resolve("README.txt"), "not vectors".getBytes("UTF-8"))
+    val rows = BinaryVectors.readDir(spark, dir.toString, 384).collect()
+    val got = rows.map { r =>
+      (new java.net.URI(r.getAs[String]("file")).getPath, r.getAs[Int]("row_in_file")) ->
+        r.getAs[scala.collection.Seq[Float]]("embedding").toSeq
+    }.toMap
+    val want = written.flatMap { case (file, vecs) =>
+      vecs.toSeq.zipWithIndex.map { case (v, i) => (file, i) -> v.toSeq }
+    }
+    assert(rows.length == 7, s"7 rows over 3 .bin files expected, got ${rows.length}")
+    assert(got == want, "every (file, row_in_file) must round-trip its vector")
   }
 
   test("full reference workflow on the JSON corpus: read -> embed -> index -> search") {
