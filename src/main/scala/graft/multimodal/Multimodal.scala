@@ -467,9 +467,10 @@ object Multimodal {
     * exactly one holder anywhere, and every frame that joins the class in
     * [[shareFromVerdicts]] belongs to that holder — "some matching class
     * owned by a doc ≠ the frame's" ⟺ "owned by a doc ≠ probe_owner". A
-    * probe class ABSENT from the corpus (no serving caller does this) uses
-    * its own solo_doc as the owner, which is only exact when the probe
-    * class is solo within the probe set — documented precondition.
+    * probe class ABSENT from the corpus (no serving caller does this) would
+    * fall back to its own solo_doc as the owner, which is wrong for a
+    * multi-doc class — so the precondition is that every probe class is in
+    * the corpus, checked when [[DebugAssertDisjointProp]] is set.
     *
     * Self-match never qualifies (same class ⇒ solo with the same owner ⇒
     * both disjuncts false), so probe classes with no other-doc neighbor get
@@ -508,6 +509,14 @@ object Multimodal {
         .select(col("lang"), col("ahash"), col("dhash"),
           col("probe_n_docs"),
           coalesce(col("corpus_solo"), col("own_solo")).as("probe_owner"))
+    if (!(probeClasses eq corpusClasses) &&
+        sys.props.get(DebugAssertDisjointProp).contains("true")) {
+      // corpus n_docs is never null, so a null multiplicity is an absent class
+      val absent = probeN.where(col("probe_n_docs").isNull).count()
+      require(absent == 0,
+        s"classVerdicts: $absent probe classes are absent from the corpus " +
+          "classes — the owner test is only exact inside the corpus universe")
+    }
     val multiVerdicts = probeN.where(col("probe_n_docs") > 1)
       .select(col("lang"), col("ahash"), col("dhash"))
     val soloProbes = probeN
@@ -667,6 +676,12 @@ object Multimodal {
             col("lang"))))
       })
 
+  /** Schema-metadata keys stamping WHICH batch a prebuilt merged quotient
+    * folded in ([[graft.sources.IncrementalHistory.phashClassesMerged]]):
+    * batch doc count + bit_xor of batch doc_ids. */
+  val BatchCountKey = "graft.batch.count"
+  val BatchXorKey = "graft.batch.xor"
+
   /** [[frameDupShareIncremental]] with the merged corpus quotient PREBUILT
     * (verdict r17 #1 — the serving form, the r17 `shinglePrefixes` move
     * applied to the media family): the quotient refresh is declared
@@ -681,12 +696,6 @@ object Multimodal {
     * O(batch) probe contract). Output ≡ [[frameDupShareIncremental]] ≡
     * full recompute restricted to batch docs (PhashSpec pins the chain);
     * `historySketches` feeds only the debug disjointness assertion. */
-  /** Schema-metadata keys stamping WHICH batch a prebuilt merged quotient
-    * folded in ([[graft.sources.IncrementalHistory.phashClassesMerged]]):
-    * batch doc count + bit_xor of batch doc_ids. */
-  val BatchCountKey = "graft.batch.count"
-  val BatchXorKey = "graft.batch.xor"
-
   def frameDupShareIncrementalPrebuilt(newDocs: DataFrame,
       historySketches: DataFrame, mergedClasses: DataFrame,
       maxHamming: Int = 3, stride: Int = PhashStride,
@@ -696,35 +705,12 @@ object Multimodal {
     // ADVICE r18): the merged quotient bakes ONE batch in, and probing it
     // with a different batch is silently unsound — the foreign batch's own
     // contribution to the corpus universe is missing, so its dup shares
-    // under-count. When the artifact declares its batch signature (count +
-    // doc_id xor, stamped at refresh), verify the probe's batch IS that
-    // batch — once per (stamp, batch plan) per JVM in production ([[
-    // verifyMergedBatch]] prewarms the verdict outside query timing), every
-    // call when the debug property is on. In-session quotients without
-    // metadata skip.
-    graft.operators.CorpusPin.check(newDocs, mergedClasses, "n_docs",
-      BatchCountKey, BatchXorKey, DebugAssertDisjointProp,
-      "frameDupShareIncrementalPrebuilt",
-      (sn, sx, n, x) =>
-        s"frameDupShareIncrementalPrebuilt: the merged quotient was built " +
-          s"for a different batch (count/xor $sn/$sx vs $n/$x) — probing " +
-          "it with this batch under-counts its dup shares; rebuild the " +
-          "artifact for this batch or use frameDupShareIncremental")
+    // under-count. In-session quotients without a stamp skip.
+    graft.operators.CorpusPin.check(newDocs, mergedClasses,
+      "frameDupShareIncrementalPrebuilt", graft.operators.CorpusPin.Batch)
     frameDupShareIncImpl(newDocs, historySketches, maxHamming, stride, cells,
       (_, _) => mergedClasses)
   }
-
-  /** Prewarm hook for the always-on batch pin: runs
-    * [[frameDupShareIncrementalPrebuilt]]'s identity check for (newDocs,
-    * mergedClasses) so the first timed serving query finds the verdict
-    * memoized. Harnesses call it next to the history-artifact build. */
-  def verifyMergedBatch(newDocs: DataFrame, mergedClasses: DataFrame): Unit =
-    graft.operators.CorpusPin.check(newDocs, mergedClasses, "n_docs",
-      BatchCountKey, BatchXorKey, DebugAssertDisjointProp,
-      "frameDupShareIncrementalPrebuilt",
-      (sn, sx, n, x) =>
-        s"verifyMergedBatch: the merged quotient was built for a different " +
-          s"batch (count/xor $sn/$sx vs $n/$x)")
 
   private def frameDupShareIncImpl(newDocs: DataFrame,
       historySketches: DataFrame, maxHamming: Int, stride: Int, cells: Int,

@@ -82,7 +82,7 @@ object Bucketing {
       // contract), while adaptive counts drift with the session's core count
       // and are where stale layouts accumulated (ADVICE r19)
       if (buckets <= 0)
-        dropSupersededLayouts(spark, safe, keep = Set(ot, lt), sfDir = sfDir)
+        dropSupersededLayouts(spark, safe, keep = Set(ot, lt))
       (ot, lt)
     })
   }
@@ -93,14 +93,16 @@ object Bucketing {
     * tables (`..._b8`, `..._b32`, ...) and the stale ones accumulated in
     * the warehouse with no cleanup. Sweeps both the catalog and the
     * warehouse DIRECTORY (a previous session's managed table survives only
-    * as its orphan location under the in-memory catalog), and purges the
-    * in-JVM memo entries whose tables just went away so a later explicit-
-    * count caller rebuilds instead of reading a dropped name. */
+    * as its orphan location under the in-memory catalog). Every table this
+    * JVM's memo still hands out is live, whatever its count — an explicit-
+    * count caller's layout from earlier in the session is never dropped. */
   private def dropSupersededLayouts(spark: SparkSession, safe: String,
-      keep: Set[String], sfDir: String): Unit = {
+      keep: Set[String]): Unit = {
     val pat = s"graft_bkt_(orders|lineitem)${java.util.regex.Pattern.quote(safe)}_b\\d+".r
+    val live = (keep ++ cache.values.flatMap { case (o, l) => Seq(o, l) })
+      .map(_.toLowerCase)
     def isStale(n: String): Boolean =
-      pat.matches(n.toLowerCase) && !keep.contains(n.toLowerCase)
+      pat.matches(n.toLowerCase) && !live.contains(n.toLowerCase)
     val wh = new org.apache.hadoop.fs.Path(
       spark.conf.get("spark.sql.warehouse.dir"))
     val fs = wh.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -112,11 +114,6 @@ object Bucketing {
     (catalogStale ++ orphanDirs.map(_.getName)).distinct
       .foreach(n => spark.sql(s"DROP TABLE IF EXISTS $n"))
     orphanDirs.filter(fs.exists).foreach(fs.delete(_, true))
-    cache.keys.filter(k => k.startsWith(s"$sfDir#"))
-      .filter(k => cache.get(k).exists { case (o, l) =>
-        !keep.contains(o.toLowerCase) && isStale(o.toLowerCase) ||
-          !keep.contains(l.toLowerCase) && isStale(l.toLowerCase) })
-      .foreach(cache.remove)
   }
 
   /** Join two bucketed tables on their bucket key — plans shuffle-free when

@@ -6,21 +6,34 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Always-on, memoized enforcement of the artifact identity pins (ADVICE
-  * r18): the span-lake / merged-quotient artifacts stamp WHICH corpus or
-  * batch they cover into schema metadata (count + doc_id xor), but until
-  * this round the stamp was only consulted under a debug property — a
-  * production serving query probing an artifact with a mismatched frame
-  * still under- or phantom-counted silently. This helper makes the check
-  * always-on at bounded cost: the O(frame) count+xor aggregate runs ONCE
-  * per (form, stamp, frame-plan) per JVM — the verdict memoizes on success
-  * keyed by the artifact's stamped signature AND the probing frame's
-  * canonicalized plan hash, so repeated serving calls (the steady state)
-  * pay nothing, a rebuilt artifact (new stamp) or a different probe frame
-  * (new plan) re-verifies, and the harnesses can prewarm the verdict
-  * outside query timing. The debug properties keep their r18 meaning,
-  * strengthened: when set, EVERY call re-verifies (no memo) — the suites'
-  * posture for the drill tests that rebuild artifacts in place. */
+  * r18): the lake artifacts stamp WHICH corpus or batch they cover into
+  * schema metadata (count + doc_id xor, [[graft.sources.Artifact.stamp]]),
+  * and a serving query probing an artifact with a mismatched frame would
+  * otherwise under- or phantom-count silently. The check is always-on at
+  * bounded cost: the O(frame) count+xor aggregate runs ONCE per (pin, stamp,
+  * frame-plan) per JVM — the verdict memoizes on success keyed by the
+  * artifact's stamped signature AND the probing frame's canonicalized plan
+  * hash, so repeated serving calls (the steady state) pay nothing, a rebuilt
+  * artifact (new stamp) or a different probe frame (new plan) re-verifies,
+  * and the harnesses can prewarm the verdict outside query timing. The debug
+  * properties keep their r18 meaning, strengthened: when set, EVERY call
+  * re-verifies (no memo) — the suites' posture for the drill tests that
+  * rebuild artifacts in place. */
 private[graft] object CorpusPin {
+
+  /** What a stamp identifies: its two metadata keys, the debug property
+    * that turns off the memo, and the noun the failure message uses. */
+  final case class Pin(countKey: String, xorKey: String, debugProp: String,
+      subject: String)
+
+  /** A whole-corpus artifact (the lake sinks and their views). */
+  val Corpus = Pin(Dedup.CorpusCountKey, Dedup.CorpusXorKey,
+    Dedup.DebugAssertSpanCorpusProp, "corpus")
+
+  /** An artifact that folded in one ingest batch (the merged media quotient). */
+  val Batch = Pin(graft.multimodal.Multimodal.BatchCountKey,
+    graft.multimodal.Multimodal.BatchXorKey,
+    graft.multimodal.Multimodal.DebugAssertDisjointProp, "batch")
 
   private val verified = TrieMap.empty[(String, Long, Long, Int), Unit]
 
@@ -28,31 +41,33 @@ private[graft] object CorpusPin {
     * swap artifacts under unchanged paths). */
   private[graft] def reset(): Unit = verified.clear()
 
-  /** Verify `frame`'s (count, bit_xor(doc_id)) signature against the stamp
-    * carried by `stampedField`'s metadata under (`countKey`, `xorKey`).
-    * No-op when the artifact carries no stamp (an in-session frame).
-    * `debugProp` set to "true" bypasses the memo; otherwise the check runs
-    * once per (form, stamp, frame plan) per JVM. `describe` renders the
-    * failure message from (stampedCount, stampedXor, actualCount,
-    * actualXor). */
-  def check(frame: DataFrame, artifact: DataFrame, stampedField: String,
-      countKey: String, xorKey: String, debugProp: String, form: String,
-      describe: (Long, Long, Long, Long) => String): Unit =
-    artifact.schema.fields.find(_.name == stampedField)
-      .filter(f => f.metadata.contains(countKey) && f.metadata.contains(xorKey))
-      .foreach { f =>
-        val (sn, sx) = (f.metadata.getLong(countKey), f.metadata.getLong(xorKey))
-        val always = sys.props.get(debugProp).contains("true")
-        // memo key is (pin family, stamp, probing plan) — NOT the calling
-        // form, so a harness prewarm verifies once for every serving form
-        // probing the same artifact with the same frame
-        val key = (countKey, sn, sx,
+  /** A frame's identity: (row count, bit_xor(doc_id)), 0 for an empty xor. */
+  def signature(frame: DataFrame): (Long, Long) = {
+    val sig = frame.agg(count(lit(1)), expr("bit_xor(doc_id)")).head()
+    (sig.getLong(0), if (sig.isNullAt(1)) 0L else sig.getLong(1))
+  }
+
+  /** Verify `frame`'s signature against the stamp `artifact` carries — on
+    * whichever field's metadata holds `pin`'s keys. No-op when no field
+    * does (an in-session frame). The failure message names `form`. */
+  def check(frame: DataFrame, artifact: DataFrame, form: String,
+      pin: Pin = Corpus): Unit =
+    artifact.schema.fields.map(_.metadata)
+      .find(m => m.contains(pin.countKey) && m.contains(pin.xorKey))
+      .foreach { m =>
+        val (sn, sx) = (m.getLong(pin.countKey), m.getLong(pin.xorKey))
+        val always = sys.props.get(pin.debugProp).contains("true")
+        // memo key is (pin, stamp, probing plan) — NOT the calling form, so
+        // a harness prewarm verifies once for every serving form probing
+        // the same artifact with the same frame
+        val key = (pin.countKey, sn, sx,
           frame.queryExecution.analyzed.canonicalized.hashCode())
         if (always || !verified.contains(key)) {
-          val sig = frame.agg(count(lit(1)), expr("bit_xor(doc_id)")).head()
-          val (n, x) = (sig.getLong(0),
-            if (sig.isNullAt(1)) 0L else sig.getLong(1))
-          require(n == sn && x == sx, describe(sn, sx, n, x))
+          val (n, x) = signature(frame)
+          require(n == sn && x == sx,
+            s"$form: the artifact was built for a different ${pin.subject} " +
+              s"(count/xor $sn/$sx vs $n/$x) — results would silently " +
+              s"mis-count; rebuild the artifact for this ${pin.subject}")
           verified.put(key, ())
         }
       }

@@ -177,7 +177,7 @@ object Dedup {
   def dupSpanSharePrebuilt(documents: DataFrame, spanSet: DataFrame,
       dupHashes: DataFrame, window: Int = SpanWindow): DataFrame = {
     require(window >= 2, s"window must be >= 2 tokens: $window")
-    assertSpanCorpus(documents, spanSet, "dupSpanSharePrebuilt")
+    CorpusPin.check(documents, spanSet, "dupSpanSharePrebuilt")
     // dedupe the caller's dup side before the LEFT join below (ADVICE r18):
     // every in-repo call site passes the already-distinct compaction view,
     // but this is public API and a non-distinct frame would fan the join out
@@ -287,6 +287,17 @@ object Dedup {
     rewritten.unionByName(untouched)
   }
 
+  /** System property making every lake serving form re-verify its corpus
+    * pin ([[CorpusPin]]) on every call — the debug twin of
+    * [[graft.multimodal.Multimodal.DebugAssertDisjointProp]]: off by
+    * default (it costs one O(docs) aggregate per call); the drill suites
+    * turn it on. */
+  val DebugAssertSpanCorpusProp = "graft.debug.assertSpanCorpus"
+  /** Schema-metadata keys stamping WHICH corpus a lake artifact covers
+    * ([[graft.sources.Artifact.stamp]]): doc count + doc_id xor. */
+  val CorpusCountKey = "graft.corpus.count"
+  val CorpusXorKey = "graft.corpus.xor"
+
   /** [[scrubDupSpans]] over PREBUILT span artifacts — the serving form
     * (verdict r17 #2): `spanSet` is the full-corpus window set the ingest
     * stream accumulates ([[spanWindowSet]] /
@@ -303,47 +314,10 @@ object Dedup {
     * with a covered position is affected by construction, so restricting
     * recovery to affected docs drops nothing. Measured at sf10: 10.8 →
     * 4.4-5.4 s warm. */
-  /** System property turning on the corpus-identity assertion inside the
-    * span-family prebuilt forms — the debug twin of
-    * [[graft.multimodal.Multimodal.DebugAssertDisjointProp]]: off by
-    * default (it costs one O(docs) aggregate); the suite turns it on. */
-  val DebugAssertSpanCorpusProp = "graft.debug.assertSpanCorpus"
-  /** Schema-metadata keys stamping WHICH corpus a span-lake artifact covers
-    * ([[graft.sources.SpanWindowLake.windows]]): doc count + doc_id xor. */
-  val CorpusCountKey = "graft.corpus.count"
-  val CorpusXorKey = "graft.corpus.xor"
-
-  /** Corpus-identity assertion for the span prebuilt forms (r18 the
-    * debug-gated batch-pin move; ADVICE r18 made it ALWAYS-ON through
-    * [[CorpusPin]]'s per-JVM memo): the artifacts cover ONE corpus, and
-    * probing them with a different documents frame is silently unsound — a
-    * doc absent from the artifact can neither be found affected nor
-    * contribute duplication, so shares under-count (or phantom-count, for a
-    * shrunk corpus). The O(docs) signature aggregate runs once per
-    * (artifact stamp, documents plan) per JVM — [[verifySpanCorpus]] lets
-    * harnesses prewarm the verdict outside query timing — and on every call
-    * when [[DebugAssertSpanCorpusProp]] is set (the drill suites' posture).
-    * Skips when the artifact carries no signature (an in-session window
-    * set). */
-  private def assertSpanCorpus(documents: DataFrame, spanSet: DataFrame,
-      form: String): Unit =
-    CorpusPin.check(documents, spanSet, "wh", CorpusCountKey, CorpusXorKey,
-      DebugAssertSpanCorpusProp, form,
-      (sn, sx, n, x) =>
-        s"$form: the span artifacts cover a different corpus (count/xor " +
-          s"$sn/$sx vs $n/$x) — results would silently under- or " +
-          "phantom-count duplication; rebuild the span lake for this corpus")
-
-  /** Prewarm hook for the always-on corpus pin: runs [[assertSpanCorpus]]'s
-    * check for (documents, spanSet) so the first timed serving query finds
-    * the verdict memoized. Harnesses call it next to the span-lake build. */
-  def verifySpanCorpus(documents: DataFrame, spanSet: DataFrame): Unit =
-    assertSpanCorpus(documents, spanSet, "verifySpanCorpus")
-
   def scrubDupSpansPrebuilt(documents: DataFrame, spanSet: DataFrame,
       dupHashes: DataFrame, window: Int = SpanWindow): DataFrame = {
     require(window >= 2, s"window must be >= 2 tokens: $window")
-    assertSpanCorpus(documents, spanSet, "scrubDupSpansPrebuilt")
+    CorpusPin.check(documents, spanSet, "scrubDupSpansPrebuilt")
     val aff = spanSet.join(dupHashes, Seq("wh"), "left_semi")
       .select(col("doc_id")).distinct()
     // position recovery: re-tokenize ONLY affected docs (the artifact keeps
@@ -1065,13 +1039,7 @@ object Dedup {
     * feeds only the always-on corpus-identity pin. */
   def ngramNoveltyPrebuilt(documents: DataFrame, sets: DataFrame,
       dfStats: DataFrame): DataFrame = {
-    CorpusPin.check(documents, sets, "sh",
-      CorpusCountKey, CorpusXorKey, DebugAssertSpanCorpusProp,
-      "ngramNoveltyPrebuilt",
-      (sn, sx, n, x) =>
-        s"ngramNoveltyPrebuilt: the ngram posting artifacts cover a " +
-          s"different corpus (count/xor $sn/$sx vs $n/$x) — every doc would " +
-          "silently mis-count; rebuild the ngram lake for this corpus")
+    CorpusPin.check(documents, sets, "ngramNoveltyPrebuilt")
     val df1 = dfStats.where(col("df") === 1)
       .select(col("lang").as("u_lang"), col("s").as("u_s"))
     val uniq = sets
@@ -1087,17 +1055,6 @@ object Dedup {
         round(coalesce(col("n_unique"), lit(0L)).cast("double") /
           col("n_shingles"), 6).as("novelty"))
   }
-
-  /** Prewarm hook for the always-on corpus pin: runs
-    * [[ngramNoveltyPrebuilt]]'s identity check so the first timed serving
-    * query finds the verdict memoized. */
-  def verifyNgramCorpus(documents: DataFrame, sets: DataFrame): Unit =
-    CorpusPin.check(documents, sets, "sh",
-      CorpusCountKey, CorpusXorKey, DebugAssertSpanCorpusProp,
-      "ngramNoveltyPrebuilt",
-      (sn, sx, n, x) =>
-        s"verifyNgramCorpus: the ngram posting artifacts cover a different " +
-          s"corpus (count/xor $sn/$sx vs $n/$x)")
 
   /** Near-dup survivor selection — the full dedup pipeline's last stage:
     * candidates (blocked shingle join) → verification (Jaccard ≥ τ) → keep
@@ -1417,12 +1374,7 @@ object Dedup {
     * equality — free. */
   def benchmarkContaminationPrebuilt(documents: DataFrame, postings: DataFrame,
       classPost: DataFrame, testShingles: DataFrame): DataFrame = {
-    CorpusPin.check(documents, postings, "s", CorpusCountKey, CorpusXorKey,
-      DebugAssertSpanCorpusProp, "benchmarkContaminationPrebuilt",
-      (sn, sx, n, x) =>
-        s"benchmarkContaminationPrebuilt: the posting artifacts cover a " +
-          s"different corpus (count/xor $sn/$sx vs $n/$x) — contamination " +
-          "flags would silently under-count; rebuild the posting lake")
+    CorpusPin.check(documents, postings, "benchmarkContaminationPrebuilt")
     postings.schema.fields.find(_.name == "s")
       .filter(_.metadata.contains(SplitSpecKey))
       .foreach { f =>
@@ -1463,16 +1415,6 @@ object Dedup {
       .agg(sum(col("n_docs")).cast("long").as("n_test_docs"))
     nSh.join(nTd, Seq("doc_id"))
   }
-
-  /** Prewarm hook for the always-on corpus pin: memoizes
-    * [[benchmarkContaminationPrebuilt]]'s identity verdict for
-    * (documents, postings) outside query timing. */
-  def verifyPostingCorpus(documents: DataFrame, postings: DataFrame): Unit =
-    CorpusPin.check(documents, postings, "s", CorpusCountKey, CorpusXorKey,
-      DebugAssertSpanCorpusProp, "benchmarkContaminationPrebuilt",
-      (sn, sx, n, x) =>
-        s"verifyPostingCorpus: the posting artifacts cover a different " +
-          s"corpus (count/xor $sn/$sx vs $n/$x)")
 
   /** Incremental exact dedup — the daily-ingest pattern: drop new docs whose
     * content hash already exists in the historical corpus, then dedup within

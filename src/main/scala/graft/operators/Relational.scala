@@ -528,54 +528,17 @@ object Relational {
     * as the parity arm; [[eventPercentilesApprox]] remains the
     * sketch-bounded serving alternative for groups whose value domain is
     * NOT lattice-bounded. */
-  /** Lattice buckets for [[eventPercentiles]]' two-level running count: the
-    * distinct-value lattice SATURATES with corpus growth (the r19 lattice
-    * argument), so a constant bucket count keeps per-bucket work bounded at
-    * every scale while giving the cumsum types×buckets-way parallelism —
-    * this is not a core-count constant. */
-  val EventValueBuckets = 1024
-
   def eventPercentiles(spark: SparkSession, sfDir: String): DataFrame = {
     val hist = events(spark, sfDir)
       .groupBy(col("event_type"), col("value"))
       .agg(count(lit(1)).as("c"))
-    // Two-level running count (r20, guide §2.5 — parallelism-capped window):
-    // the single per-type window ran the cumsum over the whole distinct
-    // lattice on AT MOST one task per event_type (sf10: 5 types ⇒ 5 of 32
-    // cores busy over 1.52M rows — measured 2.4 s of the 3.6 s row while the
-    // 10M-row histogram aggregate took 0.6 s). Split the prefix sum the
-    // classic way: bucket the lattice by a per-type monotone affine map,
-    // roll bucket subtotals up per type (tiny — ≤ types × EventValueBuckets
-    // rows — so ITS window is free), then finish the cumsum within (type,
-    // bucket) partitions, hundreds per type. `hi` = bucket base + local
-    // running sum ≡ the global running sum (LONG adds, bucket map monotone
-    // in value ⇒ concatenated order is the value order; ties impossible —
-    // values are distinct per type after the histogram groupBy). `n` rides
-    // the bounds table instead of a second window pass.
-    val bounds = hist.groupBy(col("event_type"))
-      .agg(min(col("value")).as("mn"), max(col("value")).as("mx"),
-        sum(col("c")).as("n"))
-    val nB = EventValueBuckets
-    val bucketed = hist.join(broadcast(bounds), Seq("event_type"))
-      .withColumn("bucket",
-        // null value sorts NULLS FIRST in the running window, so it gets the
-        // smallest bucket (groupBy already collapsed nulls to ≤ 1 row/type);
-        // a one-value lattice maps everything to bucket 0
-        when(col("value").isNull, lit(-1))
-          .when(col("mx") === col("mn"), lit(0))
-          .otherwise(least(floor((col("value") - col("mn")) /
-            ((col("mx") - col("mn")) / nB)).cast("int"), lit(nB - 1))))
-    val bucketSums = bucketed.groupBy(col("event_type"), col("bucket"))
-      .agg(sum(col("c")).as("bs"))
-    val bases = bucketSums.withColumn("base",
-      sum(col("bs")).over(Window.partitionBy(col("event_type"))
-        .orderBy(col("bucket"))) - col("bs"))
-    val cum = bucketed
-      .join(broadcast(bases.select(col("event_type"), col("bucket"),
-        col("base"))), Seq("event_type", "bucket"))
-      .withColumn("hi", col("base") + sum(col("c")).over(
-        Window.partitionBy(col("event_type"), col("bucket"))
-          .orderBy(col("value"))))
+    val byType = Window.partitionBy(col("event_type"))
+    val running = byType.orderBy(col("value"))
+    // hi = rows with value ≤ this one; lo = rows strictly below; n rides the
+    // same exchange as an unbounded frame over the same partitioning
+    val cum = hist
+      .withColumn("hi", sum(col("c")).over(running))
+      .withColumn("n", sum(col("c")).over(byType))
       .withColumn("lo", col("hi") - col("c"))
     def pos(p: Double): Column = lit(p) * (col("n") - 1).cast("double")
     def pick(k: Column): Column =

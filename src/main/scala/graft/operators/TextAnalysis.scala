@@ -458,10 +458,10 @@ object TextAnalysis {
     * frozen tokenizer vocabulary, it never re-derives the vocabulary per
     * scoring pass. Row-identical when `vocab` is the corpus top-K (the
     * artifact materializes [[vocabulary]]'s output unchanged); the probe
-    * pays only its own explode + broadcast join. `documents` feeds the
-    * always-on corpus pin through the caller. */
+    * pays only its own explode + broadcast join. A stamped vocabulary from
+    * a different corpus fails the always-on corpus pin ([[CorpusPin]]). */
   def oovRateWithVocab(documents: DataFrame, vocabTable: DataFrame): DataFrame = {
-    verifyVocabCorpus(documents, vocabTable) // no-op on unstamped frames
+    CorpusPin.check(documents, vocabTable, "oovRateWithVocab")
     val vocab = vocabTable.select(col("token")).withColumn("in_v", lit(1))
     documents.select(col("doc_id"), explode(tokens(col("text"))).as("token"))
       .join(broadcast(vocab), Seq("token"), "left")
@@ -507,7 +507,7 @@ object TextAnalysis {
     * row pays only the corpus explode + broadcast id join + dump sort. */
   def encodeTokensWithVocab(documents: DataFrame,
       vocabTable: DataFrame): DataFrame = {
-    verifyVocabCorpus(documents, vocabTable) // no-op on unstamped frames
+    CorpusPin.check(documents, vocabTable, "encodeTokensWithVocab")
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(desc("n"), asc("token")) // k-row window, driver-scale
     val vocab = vocabTable
@@ -799,39 +799,9 @@ object TextAnalysis {
     * pins it). `documents` feeds only the always-on corpus-identity pin. */
   def unigramLogprobPrebuilt(documents: DataFrame, perDoc: DataFrame,
       tf: DataFrame, totals: DataFrame): DataFrame = {
-    graft.operators.CorpusPin.check(documents, perDoc, "th",
-      graft.operators.Dedup.CorpusCountKey, graft.operators.Dedup.CorpusXorKey,
-      graft.operators.Dedup.DebugAssertSpanCorpusProp, "unigramLogprobPrebuilt",
-      (sn, sx, n, x) =>
-        s"unigramLogprobPrebuilt: the unigram-LM artifacts cover a different " +
-          s"corpus (count/xor $sn/$sx vs $n/$x) — every doc would silently " +
-          "misscore; rebuild the unigram lake for this corpus")
+    CorpusPin.check(documents, perDoc, "unigramLogprobPrebuilt")
     scoreUnigrams(perDoc, tf, totals)
   }
-
-  /** Prewarm hook for the always-on corpus pin: runs
-    * [[unigramLogprobPrebuilt]]'s identity check so the first timed serving
-    * query finds the verdict memoized. */
-  def verifyUnigramCorpus(documents: DataFrame, perDoc: DataFrame): Unit =
-    graft.operators.CorpusPin.check(documents, perDoc, "th",
-      graft.operators.Dedup.CorpusCountKey, graft.operators.Dedup.CorpusXorKey,
-      graft.operators.Dedup.DebugAssertSpanCorpusProp, "unigramLogprobPrebuilt",
-      (sn, sx, n, x) =>
-        s"verifyUnigramCorpus: the unigram-LM artifacts cover a different " +
-          s"corpus (count/xor $sn/$sx vs $n/$x)")
-
-  /** Always-on corpus pin for the [[graft.sources.VocabLake]] artifacts
-    * (memoized [[graft.operators.CorpusPin]] check; no-op on unstamped
-    * in-session vocab frames): a vocabulary from a DIFFERENT corpus would
-    * silently mis-encode every doc. */
-  def verifyVocabCorpus(documents: DataFrame, vocabTable: DataFrame): Unit =
-    graft.operators.CorpusPin.check(documents, vocabTable, "token",
-      graft.operators.Dedup.CorpusCountKey, graft.operators.Dedup.CorpusXorKey,
-      graft.operators.Dedup.DebugAssertSpanCorpusProp, "vocabLakeServing",
-      (sn, sx, n, x) =>
-        s"vocab lake serving: the vocabulary artifact covers a different " +
-          s"corpus (count/xor $sn/$sx vs $n/$x) — every doc would silently " +
-          "mis-encode; rebuild the vocab lake for this corpus")
 
   /** The scoring tail shared by both [[unigramLogprob]] forms: join the
     * per-doc counts to the corpus tf table, broadcast the one-row total,
@@ -1049,26 +1019,9 @@ object TextAnalysis {
     * misscore every doc. */
   def bigramLogprobPrebuilt(documents: DataFrame, perDoc: DataFrame,
       bc: DataFrame, lm: DataFrame): DataFrame = {
-    graft.operators.CorpusPin.check(documents, perDoc, "bh",
-      graft.operators.Dedup.CorpusCountKey, graft.operators.Dedup.CorpusXorKey,
-      graft.operators.Dedup.DebugAssertSpanCorpusProp, "bigramLogprobPrebuilt",
-      (sn, sx, n, x) =>
-        s"bigramLogprobPrebuilt: the bigram-LM artifacts cover a different " +
-          s"corpus (count/xor $sn/$sx vs $n/$x) — every doc would silently " +
-          "misscore; rebuild the bigram lake for this corpus")
+    CorpusPin.check(documents, perDoc, "bigramLogprobPrebuilt")
     scoreBigrams(perDoc, bc, lm)
   }
-
-  /** Prewarm hook for the always-on corpus pin ([[graft.operators
-    * .CorpusPin]]): runs [[bigramLogprobPrebuilt]]'s identity check so the
-    * first timed serving query finds the verdict memoized. */
-  def verifyBigramCorpus(documents: DataFrame, perDoc: DataFrame): Unit =
-    graft.operators.CorpusPin.check(documents, perDoc, "bh",
-      graft.operators.Dedup.CorpusCountKey, graft.operators.Dedup.CorpusXorKey,
-      graft.operators.Dedup.DebugAssertSpanCorpusProp, "bigramLogprobPrebuilt",
-      (sn, sx, n, x) =>
-        s"verifyBigramCorpus: the bigram-LM artifacts cover a different " +
-          s"corpus (count/xor $sn/$sx vs $n/$x)")
 
   /** The scoring tail shared by both [[bigramLogprob]] forms: join the
     * per-doc counts to the corpus tables, fold `c·ln(B/L)` per doc in

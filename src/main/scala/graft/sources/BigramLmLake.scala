@@ -1,7 +1,5 @@
 package graft.sources
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -32,39 +30,24 @@ import org.apache.spark.sql.functions._
   * always-on through [[graft.operators.CorpusPin]]. */
 object BigramLmLake {
 
-  private val cache = TrieMap[String, String]()
+  private val perDocArt = Artifact.table("bigram-lake", "perdoc") { (s, sf) =>
+    val docs = Artifact.documents(s, sf)
+    Artifact.stamp(graft.operators.TextAnalysis.bigramPerDocCounts(docs), "bh", docs)
+  }
 
-  /** Drop the in-JVM memo so the next read rebuilds from source — the
-    * artifact-rebuild drill's hook (production analog: a version roll). */
-  private[graft] def reset(): Unit = cache.clear()
+  private val countArt = Artifact.table("bigram-lake", "counts") { (s, sf) =>
+    perDoc(s, sf).groupBy(col("bh")).agg(sum(col("c")).as("b"))
+  }
 
-  private def dir(sfDir: String, name: String): String =
-    java.nio.file.Paths.get("target", "bigram-lake", graft.SfPath.safe(sfDir),
-      name).toAbsolutePath.toString
-
-  private def build(spark: SparkSession, sfDir: String, name: String)
-      (make: DataFrame => DataFrame): String =
-    ArtifactMemo.getOrBuild(cache, s"$name#$sfDir") {
-      val d = dir(sfDir, name)
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      make(docs).write.mode("overwrite").parquet(d)
-      d
-    }
+  private val marginalArt = Artifact.table("bigram-lake", "marginals") { (s, sf) =>
+    perDoc(s, sf).groupBy(col("xh")).agg(sum(col("c")).as("lx"))
+  }
 
   /** Per-doc bigram-hash counts `(doc_id, bh, xh, c)` — the ingest-sink
     * shape ([[graft.operators.TextAnalysis.bigramPerDocCounts]]), stamped
     * with the corpus signature. */
   def perDoc(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(build(spark, sfDir, "perdoc") { docs =>
-      val sig = docs.agg(count(lit(1)), expr("bit_xor(doc_id)")).head()
-      val m = new org.apache.spark.sql.types.MetadataBuilder()
-        .putLong(graft.operators.Dedup.CorpusCountKey, sig.getLong(0))
-        .putLong(graft.operators.Dedup.CorpusXorKey,
-          if (sig.isNullAt(1)) 0L else sig.getLong(1))
-        .build()
-      graft.operators.TextAnalysis.bigramPerDocCounts(docs)
-        .withColumn("bh", col("bh").as("bh", m))
-    })
+    perDocArt.read(spark, sfDir)
 
   /** [[perDoc]] as a doc_id-BUCKETED catalog table (r19 optimization
     * round, guide §2.4): the serving row's only corpus-sized exchange was
@@ -73,35 +56,20 @@ object BigramLmLake {
     * last shuffle from the timed query (the bucketed scan already satisfies
     * the aggregate's clustering). The write shuffle moves to artifact
     * refresh, where the production ingest sink pays it once. Bucket count
-    * is scale-adaptive: sized from the parquet artifact's bytes (one bucket
-    * per ~128 MB) with a floor of the session's parallelism so a scan can
-    * feed every core — never a constant tuned to this box. Row-identical to
-    * [[perDoc]] (same frame, re-laid-out; ArtifactLakeSpec pins content
-    * equality and that the corpus pin survives the catalog round-trip). */
-  def perDocBucketed(spark: SparkSession, sfDir: String): DataFrame = {
-    val pd = perDoc(spark, sfDir) // ensure the parquet sink + pin exist
-    val tbl = ArtifactMemo.getOrBuild(cache, s"perdoc-bkt#$sfDir") {
-      val name = "graft_lm_bigram_perdoc_" +
-        graft.SfPath.safe(sfDir).toLowerCase.replaceAll("[^a-z0-9]", "_")
-      val buckets = LakeBuckets.forDir(spark, dir(sfDir, "perdoc"))
-      graft.operators.Bucketing.writeBucketed(pd, name, "doc_id", buckets)
-      name
-    }
-    spark.table(tbl)
-  }
+    * is scale-adaptive ([[Artifact.bucketed]]) — never a constant tuned to
+    * this box. ArtifactLakeSpec pins content equality with [[perDoc]] and
+    * that the corpus pin survives the catalog round-trip. */
+  def perDocBucketed(spark: SparkSession, sfDir: String): DataFrame =
+    perDocArt.bucketed(spark, sfDir, "graft_lm_bigram_perdoc", "doc_id")
 
   /** Corpus bigram totals `(bh, b)` — derived from the PERDOC artifact. */
   def counts(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(build(spark, sfDir, "counts") { _ =>
-      perDoc(spark, sfDir).groupBy(col("bh")).agg(sum(col("c")).as("b"))
-    })
+    countArt.read(spark, sfDir)
 
   /** Bigram-left marginals `(xh, lx)` — derived from the PERDOC artifact.
     * Summing perDoc's `c` by `xh` equals summing `counts.b` over the
     * bigrams sharing the left token (associativity), and matches
     * [[graft.operators.TextAnalysis.bigramLogprob]]'s in-query `lm`. */
   def marginals(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(build(spark, sfDir, "marginals") { _ =>
-      perDoc(spark, sfDir).groupBy(col("xh")).agg(sum(col("c")).as("lx"))
-    })
+    marginalArt.read(spark, sfDir)
 }

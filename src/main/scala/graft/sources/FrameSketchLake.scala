@@ -1,9 +1,6 @@
 package graft.sources
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 
 /** The FULL-CORPUS per-frame perceptual-sketch table and its class quotient
   * as real parquet artifacts (r16, the [[VerifiedPairs]] move applied to the
@@ -14,7 +11,7 @@ import org.apache.spark.sql.functions.col
   * .phashClasses]] already land the HISTORY split this way — yet the
   * full-corpus serving rows (`near_dup_frames`, `phash_docs`) re-decoded
   * and re-hashed 134M cell digests per query. Landing both tables under
-  * target/ with the memoized-artifact contract makes those rows read the
+  * target/ as [[Artifact]]s makes those rows read the
   * production shape: a parquet scan of what ingest already wrote (sketches)
   * plus its per-version compaction view (classes — "refreshed when the
   * artifact version rolls", the [[IncrementalHistory.phashClasses]]
@@ -25,38 +22,24 @@ import org.apache.spark.sql.functions.col
   * a mangled artifact byte hashes red. */
 object FrameSketchLake {
 
-  private val cache = TrieMap[String, String]()
+  private val sketchArt = Artifact.table("phash-lake", "sketches") { (s, sf) =>
+    graft.multimodal.Multimodal.phashFrames(Artifact.documents(s, sf),
+      carry = Seq("lang"))
+  }
 
-  /** Drop the in-JVM memo so the next read rebuilds from source — the
-    * artifact-rebuild drill's hook (production analog: a version roll). */
-  private[graft] def reset(): Unit = cache.clear()
-
-  private def dir(sfDir: String, name: String): String =
-    java.nio.file.Paths.get("target", "phash-lake", graft.SfPath.safe(sfDir),
-      name).toAbsolutePath.toString
-
-  private def build(spark: SparkSession, sfDir: String, name: String)
-      (make: DataFrame => DataFrame): String =
-    ArtifactMemo.getOrBuild(cache, s"$name#$sfDir") {
-      val d = dir(sfDir, name)
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      make(docs).write.mode("overwrite").parquet(d)
-      d
-    }
+  private val classArt = Artifact.table("phash-lake", "classes") { (s, sf) =>
+    graft.multimodal.Multimodal.sketchClasses(sketches(s, sf))
+  }
 
   /** Full-corpus per-frame sketch table `(doc_id, frame_no, ahash, dhash,
     * lang)` — the ingest stream's accumulated sink shape. */
   def sketches(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(build(spark, sfDir, "sketches") { docs =>
-      graft.multimodal.Multimodal.phashFrames(docs, carry = Seq("lang"))
-    })
+    sketchArt.read(spark, sfDir)
 
   /** Full-corpus sketch-class quotient `(lang, ahash, dhash, n_docs,
     * solo_doc)` — the per-version compaction view the banded Hamming
     * verdict join runs over. Derived from the SKETCH artifact (one scan),
     * not from documents, so a rebuild never re-hashes payloads. */
   def classes(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(build(spark, sfDir, "classes") { _ =>
-      graft.multimodal.Multimodal.sketchClasses(sketches(spark, sfDir))
-    })
+    classArt.read(spark, sfDir)
 }

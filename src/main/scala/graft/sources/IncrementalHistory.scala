@@ -1,7 +1,5 @@
 package graft.sources
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -13,12 +11,11 @@ import org.apache.spark.sql.functions._
   * history side (hash table / band table / window set) INSIDE the timed
   * query, conflating the once-per-refresh artifact build with the probe the
   * row measures (at 10× the split is ~1.6 s build vs ~2.4 s probe for the
-  * span family). Landing the artifacts under target/ with the
-  * memoized-artifact contract of [[ScrubbedLake.forSfDir]] /
-  * [[graft.operators.IvfIndex.forSfDir]] makes the timed queries read the
-  * production shape (parquet scan + probe; Bench prewarms the build like the
-  * index builds), and the history tokenize/shingle/hash genuinely never
-  * reruns — which is the incremental family's whole contract.
+  * span family). Landing the artifacts under target/ as [[Artifact]]s
+  * makes the timed queries read the production shape (parquet scan +
+  * probe; Bench prewarms the build like the index builds), and the history
+  * tokenize/shingle/hash genuinely never reruns — which is the incremental
+  * family's whole contract.
   *
   * The history/batch split is the suite-wide daily-ingest convention:
   * history = `doc_id % 5 != 4`, batch = `doc_id % 5 == 4` (see
@@ -36,50 +33,46 @@ object IncrementalHistory {
   def batchDocs(documents: DataFrame): DataFrame =
     documents.where(col("doc_id") % 5 === 4)
 
-  private val cache = TrieMap[String, String]()
-
-  private def artifactDir(sfDir: String, name: String): String =
-    java.nio.file.Paths.get("target", "inc-history", graft.SfPath.safe(sfDir), name)
-      .toAbsolutePath.toString
-
-  private def build(spark: SparkSession, sfDir: String, name: String)
-      (make: DataFrame => DataFrame): String =
-    ArtifactMemo.getOrBuild(cache, s"$name#$sfDir") {
-      val dir = artifactDir(sfDir, name)
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      make(historyDocs(docs)).write.mode("overwrite").parquet(dir)
-      dir
+  /** A history artifact: `make` over the history split of the corpus. */
+  private def history(name: String)(make: DataFrame => DataFrame): Artifact =
+    Artifact.table("inc-history", name) { (s, sf) =>
+      make(historyDocs(Artifact.documents(s, sf)))
     }
 
   /** History content-hash table — the side output [[graft.operators.Dedup
     * .exact]] maintains; the anti-join / bloom-probe target. */
   def seenHashes(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(build(spark, sfDir, "seen") { h =>
-      graft.operators.Dedup.exact(h).select(col("text_md5"))
-    })
+    seenArt.read(spark, sfDir)
+
+  private val seenArt = history("seen") { h =>
+    graft.operators.Dedup.exact(h).select(col("text_md5"))
+  }
 
   /** History LSH band table — the append-only banding artifact
     * ([[graft.operators.Dedup.lshBuckets]] of the history split). */
   def bands(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(build(spark, sfDir, "bands") { h =>
-      graft.operators.Dedup.lshBuckets(h)
-    })
+    bandArt.read(spark, sfDir)
+
+  private val bandArt = history("bands")(graft.operators.Dedup.lshBuckets(_))
 
   /** History span-window set — the append-only [[graft.operators.Dedup
     * .spanWindowSet]] artifact ([[graft.streaming.EventStreams
     * .spanWindowStream]]'s sink shape). */
   def spanWindows(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(build(spark, sfDir, "span_windows") { h =>
-      graft.operators.Dedup.spanWindowSet(h)
-    })
+    spanArt.read(spark, sfDir)
+
+  private val spanArt =
+    history("span_windows")(graft.operators.Dedup.spanWindowSet(_))
 
   /** History per-frame perceptual-sketch table — the append-only media
     * twin of [[bands]] ([[graft.multimodal.Multimodal.phashFrames]] of the
     * history split, lang carried; history payloads are never re-decoded). */
   def phashSketches(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(build(spark, sfDir, "phash") { h =>
-      graft.multimodal.Multimodal.phashFrames(h, carry = Seq("lang"))
-    })
+    phashArt.read(spark, sfDir)
+
+  private val phashArt = history("phash") { h =>
+    graft.multimodal.Multimodal.phashFrames(h, carry = Seq("lang"))
+  }
 
   /** History sketch-CLASS quotient — the distinct-(lang, aHash, dHash)
     * rollup of [[phashSketches]] with the per-class doc stats the media
@@ -94,10 +87,12 @@ object IncrementalHistory {
     * aren't streaming-incremental; the quotient is a per-version derived
     * table, not per-row state). */
   def phashClasses(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(build(spark, sfDir, "phash_classes") { h =>
-      graft.multimodal.Multimodal.sketchClasses(
-        graft.multimodal.Multimodal.phashFrames(h, carry = Seq("lang")))
-    })
+    classArt.read(spark, sfDir)
+
+  private val classArt = history("phash_classes") { h =>
+    graft.multimodal.Multimodal.sketchClasses(
+      graft.multimodal.Multimodal.phashFrames(h, carry = Seq("lang")))
+  }
 
   /** POST-INGEST sketch-class quotient — [[phashClasses]] with today's
     * batch folded in via the flip-aware disjoint merge (r18, the r17
@@ -113,32 +108,21 @@ object IncrementalHistory {
     * gap (committed 8.11 s vs measured ~4.4-4.8 s floor) was exactly that
     * re-fill. */
   def phashClassesMerged(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(
-      ArtifactMemo.getOrBuild(cache, s"phash_classes_merged#$sfDir") {
-        val dir = artifactDir(sfDir, "phash_classes_merged")
-        val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        val batch = batchDocs(docs)
-        val batchQ = graft.multimodal.Multimodal.sketchClasses(
-          graft.multimodal.Multimodal.phashFrames(batch, carry = Seq("lang")))
-        // stamp WHICH batch this quotient merged (count + doc_id xor) into
-        // the artifact's schema metadata — the τ-pin move (ADVICE r17 #3),
-        // media edition: a probe with a DIFFERENT batch is silently unsound
-        // (the foreign batch's own contribution to the corpus universe is
-        // missing), so the serving form's debug assertion can check identity
-        // instead of trusting convention
-        val sig = batch.agg(count(lit(1)),
-          expr("bit_xor(doc_id)")).head()
-        val m = new org.apache.spark.sql.types.MetadataBuilder()
-          .putLong(graft.multimodal.Multimodal.BatchCountKey, sig.getLong(0))
-          .putLong(graft.multimodal.Multimodal.BatchXorKey,
-            if (sig.isNullAt(1)) 0L else sig.getLong(1))
-          .build()
-        graft.multimodal.Multimodal.mergeDisjointClassesIncremental(
-            batchQ, phashClasses(spark, sfDir))
-          .withColumn("n_docs", col("n_docs").as("n_docs", m))
-          .write.mode("overwrite").parquet(dir)
-        dir
-      })
+    mergedArt.read(spark, sfDir)
+
+  // stamped with WHICH batch the quotient merged (the τ-pin move, media
+  // edition — ADVICE r17 #3): a probe with a DIFFERENT batch is silently
+  // unsound (the foreign batch's own contribution to the corpus universe is
+  // missing)
+  private val mergedArt =
+    Artifact.table("inc-history", "phash_classes_merged") { (s, sf) =>
+      val batch = batchDocs(Artifact.documents(s, sf))
+      val batchQ = graft.multimodal.Multimodal.sketchClasses(
+        graft.multimodal.Multimodal.phashFrames(batch, carry = Seq("lang")))
+      Artifact.stamp(graft.multimodal.Multimodal.mergeDisjointClassesIncremental(
+          batchQ, phashClasses(s, sf)), "n_docs", batch,
+        pin = graft.operators.CorpusPin.Batch)
+    }
 
   /** History per-doc shingle-set table — the clustering family's
     * never-re-tokenize artifact ([[graft.operators.Dedup.shingleSetsOf]] of
@@ -147,25 +131,26 @@ object IncrementalHistory {
     * pair (explode/size are per-row projections) and feeds the
     * prefix-filtered incremental probe's exact verification directly. */
   def shingleSets(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(build(spark, sfDir, "shingle_sets") { h =>
-      graft.operators.Dedup.shingleSetsOf(h)
-    })
+    setArt.read(spark, sfDir)
+
+  private val setArt =
+    history("shingle_sets")(graft.operators.Dedup.shingleSetsOf(_))
 
   /** Yesterday's near-dup labeling — the clustering family's REWRITE
     * artifact (the one non-append history of the six incremental
     * modalities): [[graft.operators.Dedup.nearDupClusters]] of the history
     * split at the suite's declared 0.5 threshold. */
   def nearDupLabels(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(build(spark, sfDir, "near_dup_labels") { h =>
-      graft.operators.Dedup.nearDupClusters(h, 0.5)
-    })
+    labelArt.read(spark, sfDir)
+
+  private val labelArt = history("near_dup_labels") { h =>
+    graft.operators.Dedup.nearDupClusters(h, 0.5)
+  }
 
   /** The clustering family's probe threshold, baked into the prefix
     * artifact's per-doc prefix LENGTHS — [[shinglePrefixes]] is only sound
     * for probes at exactly this τ. */
   val ShingleThreshold = 0.5
-
-  private val cmsCache = TrieMap[String, Array[Byte]]()
 
   /** History's shingle-order sketch (verdict r16 #1) — the ~1 MB Count-Min
     * sketch over history postings that defines the rare-first prefix order
@@ -178,28 +163,22 @@ object IncrementalHistory {
     * hotness is the right exclusion signal to within the product bound
     * (candidate cost at a shingle is prefixA-pop × prefixB-pop, and a
     * batch-only-hot shingle has near-zero history pop). */
-  def shingleCms(spark: SparkSession, sfDir: String): Array[Byte] = {
-    val key = s"shingle_cms#$sfDir"
-    cmsCache.get(key) match {
-      case Some(b) => b
-      case None => key.intern.synchronized {
-        cmsCache.getOrElseUpdate(key, {
-          val path = java.nio.file.Paths.get(artifactDir(sfDir, "shingle_cms"), "cms.bin")
-          if (!java.nio.file.Files.exists(path)) {
-            val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-            val bytes = graft.operators.Dedup.shingleOrderCms(
-              graft.operators.Dedup.shingleSetsOf(historyDocs(docs)))
-            java.nio.file.Files.createDirectories(path.getParent)
-            val tmp = path.resolveSibling("cms.bin.tmp")
-            java.nio.file.Files.write(tmp, bytes)
-            java.nio.file.Files.move(tmp, path,
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-              java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          }
-          java.nio.file.Files.readAllBytes(path)
-        })
-      }
-    }
+  def shingleCms(spark: SparkSession, sfDir: String): Array[Byte] =
+    java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(cmsArt.path(spark, sfDir), "cms.bin"))
+
+  // raw sketch bytes, not a table: written tmp-then-ATOMIC_MOVE so a reader
+  // never sees a torn file
+  private val cmsArt = Artifact("inc-history", "shingle_cms") { (s, sf, d) =>
+    val bytes = graft.operators.Dedup.shingleOrderCms(
+      graft.operators.Dedup.shingleSetsOf(historyDocs(Artifact.documents(s, sf))))
+    val path = java.nio.file.Paths.get(d, "cms.bin")
+    java.nio.file.Files.createDirectories(path.getParent)
+    val tmp = path.resolveSibling("cms.bin.tmp")
+    java.nio.file.Files.write(tmp, bytes)
+    java.nio.file.Files.move(tmp, path,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
 
   /** History's prefix-posting table under [[shingleCms]]'s order at
@@ -211,11 +190,14 @@ object IncrementalHistory {
     * prefix table is a per-version artifact, not an append log — though
     * within a version each ingested batch could append its own rows). */
   def shinglePrefixes(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(build(spark, sfDir, "shingle_prefixes") { h =>
+    prefixArt.read(spark, sfDir)
+
+  private val prefixArt =
+    Artifact.table("inc-history", "shingle_prefixes") { (s, sf) =>
       graft.operators.Dedup.shinglePrefixesUnder(
-        graft.operators.Dedup.shingleSetsOf(h),
-        shingleCms(spark, sfDir), ShingleThreshold)
-    })
+        graft.operators.Dedup.shingleSetsOf(historyDocs(Artifact.documents(s, sf))),
+        shingleCms(s, sf), ShingleThreshold)
+    }
 
   /** Build every history artifact (Bench prewarm hook — the analog of the
     * index builds: the once-per-refresh cost, outside query timing). */
@@ -230,8 +212,5 @@ object IncrementalHistory {
     nearDupLabels(spark, sfDir)
     shingleCms(spark, sfDir)
     shinglePrefixes(spark, sfDir)
-    // the shingle-family builds persist their shared subtree — release it so
-    // the prewarm leaves no cache pinned into the timed passes
-    graft.CacheRegistry.release()
   }
 }

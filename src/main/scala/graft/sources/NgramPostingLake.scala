@@ -1,7 +1,5 @@
 package graft.sources
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -37,49 +35,28 @@ import org.apache.spark.sql.functions._
   * [[graft.operators.CorpusPin]]. */
 object NgramPostingLake {
 
-  private val cache = TrieMap[String, String]()
+  private val setArt = Artifact.table("ngram-lake", "sets") { (s, sf) =>
+    val docs = Artifact.documents(s, sf)
+    Artifact.stamp(graft.operators.Dedup.shingleSetsOf(docs), "sh", docs)
+  }
 
-  /** Drop the in-JVM memo so the next read rebuilds from source — the
-    * artifact-rebuild drill's hook (production analog: a version roll). */
-  private[graft] def reset(): Unit = cache.clear()
-
-  private def dir(sfDir: String, name: String): String =
-    java.nio.file.Paths.get("target", "ngram-lake", graft.SfPath.safe(sfDir),
-      name).toAbsolutePath.toString
-
-  private def build(spark: SparkSession, sfDir: String, name: String)
-      (make: DataFrame => DataFrame): String =
-    ArtifactMemo.getOrBuild(cache, s"$name#$sfDir") {
-      val d = dir(sfDir, name)
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      make(docs).write.mode("overwrite").parquet(d)
-      d
-    }
+  private val dfArt = Artifact.table("ngram-lake", "dfstats") { (s, sf) =>
+    sets(s, sf)
+      .select(col("doc_id"), col("lang"), explode(col("sh")).as("s"))
+      .groupBy(col("lang"), col("s"))
+      .agg(count(lit(1)).as("df"))
+  }
 
   /** Per-doc sorted distinct shingle-hash sets `(doc_id, lang, sh)` — the
     * ingest-sink shape, stamped with the corpus signature. Docs with < 3
     * tokens have no shingles and are absent, matching
     * [[graft.operators.Dedup.ngramNovelty]]'s own universe. */
   def sets(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(build(spark, sfDir, "sets") { docs =>
-      val sig = docs.agg(count(lit(1)), expr("bit_xor(doc_id)")).head()
-      val m = new org.apache.spark.sql.types.MetadataBuilder()
-        .putLong(graft.operators.Dedup.CorpusCountKey, sig.getLong(0))
-        .putLong(graft.operators.Dedup.CorpusXorKey,
-          if (sig.isNullAt(1)) 0L else sig.getLong(1))
-        .build()
-      graft.operators.Dedup.shingleSetsOf(docs)
-        .withColumn("sh", col("sh").as("sh", m))
-    })
+    setArt.read(spark, sfDir)
 
   /** Document frequency per (lang, shingle) `(lang, s, df)` — derived from
     * the SETS artifact. (doc_id, s) is unique within a doc's set, so a
     * plain count per (lang, s) IS the distinct-doc frequency. */
   def dfStats(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(build(spark, sfDir, "dfstats") { _ =>
-      sets(spark, sfDir)
-        .select(col("doc_id"), col("lang"), explode(col("sh")).as("s"))
-        .groupBy(col("lang"), col("s"))
-        .agg(count(lit(1)).as("df"))
-    })
+    dfArt.read(spark, sfDir)
 }

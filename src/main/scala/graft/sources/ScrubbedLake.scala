@@ -1,7 +1,5 @@
 package graft.sources
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -31,25 +29,18 @@ import org.apache.spark.sql.functions._
   */
 object ScrubbedLake {
 
-  private val cache = TrieMap[String, String]()
-
-  /** Build (once per JVM per sf dir) the scrubbed-corpus lake and return its
-    * path. Idempotent overwrite; memoized-artifact contract of
-    * [[SortedLake.forSfDir]] / [[graft.operators.IvfIndex.forSfDir]]. */
-  def forSfDir(spark: SparkSession, sfDir: String): String = {
-    val safe = graft.SfPath.safe(sfDir)
-    cache.getOrElseUpdate(s"scrubbed#$sfDir", {
-      val dir = java.nio.file.Paths.get("target", "scrubbed-lake", safe, "documents")
-        .toAbsolutePath.toString
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      // NOTE: the scrub's token/window persists stay registered — they are
-      // the dupspan family's shared working set (Bench/Verify release at
-      // family boundaries; an eager release here would evict the frames the
-      // adjacent span queries are about to reuse)
-      export(docs, dir)
-      dir
-    })
+  // NOTE: the scrub's token/window persists stay registered — they are the
+  // dupspan family's shared working set (Bench/Verify release at family
+  // boundaries; an eager release here would evict the frames the adjacent
+  // span queries are about to reuse)
+  private val lake = Artifact("scrubbed-lake", "documents") { (s, sf, d) =>
+    export(Artifact.documents(s, sf), d)
   }
+
+  /** Build (once per JVM per sf dir, [[Artifact]]) the scrubbed-corpus lake
+    * and return its path. */
+  def forSfDir(spark: SparkSession, sfDir: String): String =
+    lake.path(spark, sfDir)
 
   /** The export itself, target-dir-agnostic: scrub + lang join + partitioned
     * sorted write. `lang` comes from a broadcast-eligible projection of the

@@ -1,9 +1,7 @@
 package graft.sources
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
 
 /** The full-corpus split-frozen shingle postings and the test-side class
   * posting view as real parquet artifacts (r19, the [[SpanWindowLake]] move
@@ -33,55 +31,35 @@ import org.apache.spark.sql.functions._
   * mangled artifact byte hashes red. */
 object ShinglePostingLake {
 
-  private val cache = TrieMap[String, String]()
+  private val postingArt = Artifact.table("posting-lake", "postings",
+      write = (df, d) =>
+        df.write.mode("overwrite").partitionBy("split").parquet(d)) { (s, sf) =>
+    val docs = Artifact.documents(s, sf)
+    Artifact.stamp(graft.operators.Dedup.shinglePostingsWithSplit(docs), "s",
+      docs, extra = Map(graft.operators.Dedup.SplitSpecKey ->
+        graft.operators.TextAnalysis.splitSpecTag))
+  }
 
-  /** Drop the in-JVM memo so the next read rebuilds from source — the
-    * artifact-rebuild drill's hook (production analog: a version roll). */
-  private[graft] def reset(): Unit = cache.clear()
+  private val classArt = Artifact.table("posting-lake", "test-classes") { (s, sf) =>
+    graft.operators.Dedup.testClassesFromPostings(postings(s, sf))
+  }
 
-  private def dir(sfDir: String, name: String): String =
-    java.nio.file.Paths.get("target", "posting-lake", graft.SfPath.safe(sfDir),
-      name).toAbsolutePath.toString
-
-  private def build(spark: SparkSession, sfDir: String, name: String)
-      (write: (DataFrame, String) => Unit): String =
-    ArtifactMemo.getOrBuild(cache, s"$name#$sfDir") {
-      val d = dir(sfDir, name)
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      write(docs, d)
-      d
-    }
+  private val shingleArt = Artifact.table("posting-lake", "test-shingles") { (s, sf) =>
+    testClasses(s, sf).select(col("s")).distinct()
+  }
 
   /** Split-frozen shingle postings `(doc_id, split, s)`, split-partitioned
     * and identity-stamped. */
   def postings(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(build(spark, sfDir, "postings") { (docs, d) =>
-      val sig = docs.agg(count(lit(1)), expr("bit_xor(doc_id)")).head()
-      val m = new org.apache.spark.sql.types.MetadataBuilder()
-        .putLong(graft.operators.Dedup.CorpusCountKey, sig.getLong(0))
-        .putLong(graft.operators.Dedup.CorpusXorKey,
-          if (sig.isNullAt(1)) 0L else sig.getLong(1))
-        .putString(graft.operators.Dedup.SplitSpecKey,
-          graft.operators.TextAnalysis.splitSpecTag)
-        .build()
-      graft.operators.Dedup.shinglePostingsWithSplit(docs)
-        .withColumn("s", col("s").as("s", m))
-        .write.mode("overwrite").partitionBy("split").parquet(d)
-    })
+    postingArt.read(spark, sfDir)
 
   /** Test-side shingle-set class postings `(n_docs, cid, s)` — derived
     * from the POSTINGS artifact's pruned test partition. */
   def testClasses(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(build(spark, sfDir, "test-classes") { (_, d) =>
-      graft.operators.Dedup.testClassesFromPostings(postings(spark, sfDir))
-        .write.mode("overwrite").parquet(d)
-    })
+    classArt.read(spark, sfDir)
 
   /** Distinct test shingle membership set `(s)` — derived from
     * [[testClasses]]; the serving probe's broadcast side. */
   def testShingles(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(build(spark, sfDir, "test-shingles") { (_, d) =>
-      testClasses(spark, sfDir).select(col("s")).distinct()
-        .write.mode("overwrite").parquet(d)
-    })
+    shingleArt.read(spark, sfDir)
 }

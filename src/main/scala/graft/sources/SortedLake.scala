@@ -1,7 +1,5 @@
 package graft.sources
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -39,11 +37,8 @@ object SortedLake {
     * per-row-group and does not depend on the count. */
   val RangeFiles = 8
 
-  private val cache = TrieMap[String, String]()
-
-  /** Build (once per JVM per sf dir) the time-sorted events layout and return
-    * its path. Idempotent overwrite, same memoized-artifact contract as
-    * [[graft.operators.IvfIndex.forSfDir]].
+  /** Build (once per JVM per sf dir, [[Artifact]]) the time-sorted events
+    * layout and return its path.
     *
     * The layout materializes the floor-second epoch as an explicit BIGINT
     * `ts_sec` column and range-partitions/sorts on IT (ts and ts_sec are
@@ -53,19 +48,15 @@ object SortedLake {
     * Spark 4 pushes but does NOT row-group-skip on the micros/NTZ data the
     * driver now generates — the filter decoded all rows). A zone-map key
     * must be a type whose stats the engine actually consults. */
-  def forSfDir(spark: SparkSession, sfDir: String): String = {
-    val safe = graft.SfPath.safe(sfDir)
-    cache.getOrElseUpdate(s"events#$sfDir", {
-      val dir = java.nio.file.Paths.get("target", "sorted-lake", safe, "events")
-        .toAbsolutePath.toString
-      val raw = spark.read.parquet(s"$sfDir/events.parquet")
-      raw
-        .withColumn("ts_sec", graft.operators.Relational.tsSecExpr(raw))
-        .repartitionByRange(RangeFiles, col("ts_sec"))
-        .sortWithinPartitions(col("ts_sec"))
-        .write.mode("overwrite").parquet(dir)
-      dir
-    })
+  def forSfDir(spark: SparkSession, sfDir: String): String =
+    lake.path(spark, sfDir)
+
+  private val lake = Artifact.table("sorted-lake", "events") { (s, sf) =>
+    val raw = s.read.parquet(s"$sf/events.parquet")
+    raw
+      .withColumn("ts_sec", graft.operators.Relational.tsSecExpr(raw))
+      .repartitionByRange(RangeFiles, col("ts_sec"))
+      .sortWithinPartitions(col("ts_sec"))
   }
 
   /** The sorted events layout as a DataFrame (`ts` keeps the raw table's

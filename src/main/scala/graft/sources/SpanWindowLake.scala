@@ -1,7 +1,5 @@
 package graft.sources
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -29,53 +27,29 @@ import org.apache.spark.sql.functions._
   * a mangled artifact byte hashes red. */
 object SpanWindowLake {
 
-  private val cache = TrieMap[String, String]()
+  // stamped with WHICH corpus the window set covers (the r18 identity pin):
+  // a serving query probing these artifacts with a DIFFERENT documents
+  // frame is silently unsound (missed or phantom duplication)
+  private val windowArt = Artifact.table("span-lake", "windows") { (s, sf) =>
+    val docs = Artifact.documents(s, sf)
+    Artifact.stamp(graft.operators.Dedup.spanWindowSet(docs), "wh", docs)
+  }
 
-  /** Drop the in-JVM memo so the next read rebuilds from source — the
-    * artifact-rebuild drill's hook (production analog: a version roll). */
-  private[graft] def reset(): Unit = cache.clear()
-
-  private def dir(sfDir: String, name: String): String =
-    java.nio.file.Paths.get("target", "span-lake", graft.SfPath.safe(sfDir),
-      name).toAbsolutePath.toString
-
-  private def build(spark: SparkSession, sfDir: String, name: String)
-      (make: DataFrame => DataFrame): String =
-    ArtifactMemo.getOrBuild(cache, s"$name#$sfDir") {
-      val d = dir(sfDir, name)
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      make(docs).write.mode("overwrite").parquet(d)
-      d
-    }
+  private val dupArt = Artifact.table("span-lake", "dup-hashes") { (s, sf) =>
+    windows(s, sf)
+      .groupBy(col("wh")).agg(count(lit(1)).as("nd"))
+      .where(col("nd") > 1).select(col("wh"))
+  }
 
   /** Full-corpus span-window set `(doc_id, wh)` — one row per distinct
     * (doc, 20-token-window hash), the ingest stream's accumulated sink
     * shape ([[graft.operators.Dedup.spanWindowSet]]). */
   def windows(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(build(spark, sfDir, "windows") { docs =>
-      // stamp WHICH corpus this window set covers (doc count + doc_id xor)
-      // into the artifact's schema metadata — the r18 identity-pin move
-      // (τ pin / batch pin): a serving query probing these artifacts with a
-      // DIFFERENT documents frame is silently unsound (missed or phantom
-      // duplication), so the prebuilt forms' debug assertion can check
-      // identity instead of trusting convention
-      val sig = docs.agg(count(lit(1)), expr("bit_xor(doc_id)")).head()
-      val m = new org.apache.spark.sql.types.MetadataBuilder()
-        .putLong(graft.operators.Dedup.CorpusCountKey, sig.getLong(0))
-        .putLong(graft.operators.Dedup.CorpusXorKey,
-          if (sig.isNullAt(1)) 0L else sig.getLong(1))
-        .build()
-      graft.operators.Dedup.spanWindowSet(docs)
-        .withColumn("wh", col("wh").as("wh", m))
-    })
+    windowArt.read(spark, sfDir)
 
   /** Duplicated-hash compaction view `(wh)` — window hashes held by ≥ 2
     * distinct docs. Derived from the WINDOWS artifact (one scan + one
     * groupBy), not from documents, so a rebuild never re-tokenizes. */
   def dupHashes(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(build(spark, sfDir, "dup-hashes") { _ =>
-      windows(spark, sfDir)
-        .groupBy(col("wh")).agg(count(lit(1)).as("nd"))
-        .where(col("nd") > 1).select(col("wh"))
-    })
+    dupArt.read(spark, sfDir)
 }

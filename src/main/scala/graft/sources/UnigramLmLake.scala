@@ -1,7 +1,5 @@
 package graft.sources
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -33,39 +31,24 @@ import org.apache.spark.sql.functions._
   * always-on through [[graft.operators.CorpusPin]]. */
 object UnigramLmLake {
 
-  private val cache = TrieMap[String, String]()
+  private val perDocArt = Artifact.table("unigram-lake", "perdoc") { (s, sf) =>
+    val docs = Artifact.documents(s, sf)
+    Artifact.stamp(graft.operators.TextAnalysis.unigramPerDocCounts(docs), "th", docs)
+  }
 
-  /** Drop the in-JVM memo so the next read rebuilds from source — the
-    * artifact-rebuild drill's hook (production analog: a version roll). */
-  private[graft] def reset(): Unit = cache.clear()
+  private val tfArt = Artifact.table("unigram-lake", "tf") { (s, sf) =>
+    perDoc(s, sf).groupBy(col("th")).agg(sum(col("c")).as("n"))
+  }
 
-  private def dir(sfDir: String, name: String): String =
-    java.nio.file.Paths.get("target", "unigram-lake", graft.SfPath.safe(sfDir),
-      name).toAbsolutePath.toString
-
-  private def build(spark: SparkSession, sfDir: String, name: String)
-      (make: DataFrame => DataFrame): String =
-    ArtifactMemo.getOrBuild(cache, s"$name#$sfDir") {
-      val d = dir(sfDir, name)
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      make(docs).write.mode("overwrite").parquet(d)
-      d
-    }
+  private val totalArt = Artifact.table("unigram-lake", "totals") { (s, sf) =>
+    tf(s, sf).agg(sum(col("n")).as("total"))
+  }
 
   /** Per-doc token-hash counts `(doc_id, th, c)` — the ingest-sink shape
     * ([[graft.operators.TextAnalysis.unigramPerDocCounts]]), stamped with
     * the corpus signature. */
   def perDoc(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(build(spark, sfDir, "perdoc") { docs =>
-      val sig = docs.agg(count(lit(1)), expr("bit_xor(doc_id)")).head()
-      val m = new org.apache.spark.sql.types.MetadataBuilder()
-        .putLong(graft.operators.Dedup.CorpusCountKey, sig.getLong(0))
-        .putLong(graft.operators.Dedup.CorpusXorKey,
-          if (sig.isNullAt(1)) 0L else sig.getLong(1))
-        .build()
-      graft.operators.TextAnalysis.unigramPerDocCounts(docs)
-        .withColumn("th", col("th").as("th", m))
-    })
+    perDocArt.read(spark, sfDir)
 
   /** [[perDoc]] as a doc_id-BUCKETED catalog table — same rationale and
     * sizing as [[BigramLmLake.perDocBucketed]] (guide §2.4): the serving
@@ -73,30 +56,17 @@ object UnigramLmLake {
     * feeding the per-doc fold; the bucketed sink's scan satisfies the
     * aggregate's clustering, so the timed query keeps only the oracle
     * dump's orderBy. */
-  def perDocBucketed(spark: SparkSession, sfDir: String): DataFrame = {
-    val pd = perDoc(spark, sfDir) // ensure the parquet sink + pin exist
-    val tbl = ArtifactMemo.getOrBuild(cache, s"perdoc-bkt#$sfDir") {
-      val name = "graft_lm_unigram_perdoc_" +
-        graft.SfPath.safe(sfDir).toLowerCase.replaceAll("[^a-z0-9]", "_")
-      val buckets = LakeBuckets.forDir(spark, dir(sfDir, "perdoc"))
-      graft.operators.Bucketing.writeBucketed(pd, name, "doc_id", buckets)
-      name
-    }
-    spark.table(tbl)
-  }
+  def perDocBucketed(spark: SparkSession, sfDir: String): DataFrame =
+    perDocArt.bucketed(spark, sfDir, "graft_lm_unigram_perdoc", "doc_id")
 
   /** Corpus token totals `(th, n)` — derived from the PERDOC artifact. */
   def tf(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(build(spark, sfDir, "tf") { _ =>
-      perDoc(spark, sfDir).groupBy(col("th")).agg(sum(col("c")).as("n"))
-    })
+    tfArt.read(spark, sfDir)
 
   /** The one-row corpus token count `(total)` — derived from the TF
     * artifact. Summing tf's `n` equals summing perDoc's `c`
     * (associativity), and matches [[graft.operators.TextAnalysis
     * .unigramLogprob]]'s in-query `total`. */
   def totals(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(build(spark, sfDir, "totals") { _ =>
-      tf(spark, sfDir).agg(sum(col("n")).as("total"))
-    })
+    totalArt.read(spark, sfDir)
 }

@@ -1,7 +1,5 @@
 package graft.sources
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -18,8 +16,7 @@ import org.apache.spark.sql.functions.col
   * (reference: clusters.py builds offline, IVF.cpp:648 loads; this repo's
   * [[IncrementalHistory]] / SQ8 codebook / PQ codebook follow it).
   *
-  * Landing the table under target/ with the memoized-artifact contract of
-  * [[IncrementalHistory]] makes the timed queries read the production
+  * Landing the table under target/ as an [[Artifact]] makes the timed queries read the production
   * shape: a production pipeline writes `verified_pairs` to the lake once
   * per corpus version and every downstream stage scans it. Bench prewarms
   * the build (fill cost on the prewarm line); an un-prewarmed run (Verify,
@@ -33,38 +30,20 @@ import org.apache.spark.sql.functions.col
   * hashes red, the layout-invariance class of check. */
 object VerifiedPairs {
 
-  private val cache = TrieMap[String, String]()
-
-  /** Drop the in-JVM memo so the next [[forSfDir]] rebuilds from source —
-    * the artifact-rebuild drill's hook (production analog: a corpus-version
-    * roll invalidates the table). */
-  private[graft] def reset(): Unit = cache.clear()
-
   /** Stable threshold tag: 0.5 → "j0500" (4 digits carry any realistic
     * threshold grid without dots in the path). */
   private[sources] def tag(minJaccard: Double): String =
     f"j${(minJaccard * 1000).round}%04d"
 
-  private def artifactDir(sfDir: String, minJaccard: Double): String =
-    java.nio.file.Paths.get("target", "pair-table", graft.SfPath.safe(sfDir),
-      tag(minJaccard)).toAbsolutePath.toString
-
   /** The pair table for `sfDir`'s documents at `minJaccard` — built once
-    * per (corpus, threshold) and read as parquet thereafter (at-most-once
-    * per JVM via [[ArtifactMemo]]; in-JVM staleness assumption documented
-    * there). The build releases nothing itself: its persisted shingle
-    * subtree stays registry-tracked and dies at the caller's family
+    * per (corpus, threshold) and read as parquet thereafter
+    * ([[Artifact]]). The build releases nothing itself: its persisted
+    * shingle subtree stays registry-tracked and dies at the caller's family
     * boundary, same as every other in-family fill. */
   def forSfDir(spark: SparkSession, sfDir: String,
-      minJaccard: Double): DataFrame = {
-    val dir = ArtifactMemo.getOrBuild(cache, s"${tag(minJaccard)}#$sfDir") {
-      val d = artifactDir(sfDir, minJaccard)
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      graft.operators.Dedup.ngramJaccardPairs(docs, minJaccard)
-        .write.mode("overwrite").parquet(d)
-      d
-    }
-    spark.read.parquet(dir)
+      minJaccard: Double): DataFrame =
+    Artifact.table("pair-table", tag(minJaccard)) { (s, sf) =>
+      graft.operators.Dedup.ngramJaccardPairs(Artifact.documents(s, sf), minJaccard)
+    }.read(spark, sfDir)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
-  }
 }

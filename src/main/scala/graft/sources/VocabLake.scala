@@ -1,9 +1,6 @@
 package graft.sources
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** The corpus top-K token vocabulary as a parquet artifact (r19 optimization
   * round): `tok_encode` and `oov_rate` each re-ran the full-corpus token
@@ -19,31 +16,11 @@ import org.apache.spark.sql.functions._
   * tokenizer version. */
 object VocabLake {
 
-  private val cache = TrieMap[String, String]()
-
-  /** Drop the in-JVM memo so the next read rebuilds from source — the
-    * artifact-rebuild drill's hook (production analog: a tokenizer roll). */
-  private[graft] def reset(): Unit = cache.clear()
-
-  private def dir(sfDir: String, k: Int): String =
-    java.nio.file.Paths.get("target", "vocab-lake", graft.SfPath.safe(sfDir),
-      s"k$k").toAbsolutePath.toString
-
   /** The top-`k` vocabulary `(token, n)`, stamped with the corpus
     * signature. */
   def topK(spark: SparkSession, sfDir: String, k: Int): DataFrame =
-    spark.read.parquet(ArtifactMemo.getOrBuild(cache, s"k$k#$sfDir") {
-      val d = dir(sfDir, k)
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      val sig = docs.agg(count(lit(1)), expr("bit_xor(doc_id)")).head()
-      val m = new org.apache.spark.sql.types.MetadataBuilder()
-        .putLong(graft.operators.Dedup.CorpusCountKey, sig.getLong(0))
-        .putLong(graft.operators.Dedup.CorpusXorKey,
-          if (sig.isNullAt(1)) 0L else sig.getLong(1))
-        .build()
-      graft.operators.TextAnalysis.vocabulary(docs, k)
-        .withColumn("token", col("token").as("token", m))
-        .write.mode("overwrite").parquet(d)
-      d
-    })
+    Artifact.table("vocab-lake", s"k$k") { (s, sf) =>
+      val docs = Artifact.documents(s, sf)
+      Artifact.stamp(graft.operators.TextAnalysis.vocabulary(docs, k), "token", docs)
+    }.read(spark, sfDir)
 }

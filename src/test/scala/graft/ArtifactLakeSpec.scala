@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.sources.{FrameSketchLake, VerifiedPairs}
+import graft.sources.{Artifact, FrameSketchLake, VerifiedPairs}
 
 /** Rebuild + content-parity drill for the r16 full-corpus lake artifacts
   * (VerifiedPairs, FrameSketchLake) — the [[IncrementalDrillSpec]] posture
@@ -26,7 +26,7 @@ class ArtifactLakeSpec extends SparkSpec {
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
     val direct = rows(graft.operators.Dedup.ngramJaccardPairs(docs, 0.5))
     graft.CacheRegistry.release()
-    VerifiedPairs.reset()
+    Artifact.reset()
     val art = rows(VerifiedPairs.forSfDir(spark, sf0001, 0.5))
     graft.CacheRegistry.release()
     assert(art == direct, s"artifact diverged: ${art.size} vs ${direct.size}")
@@ -35,7 +35,7 @@ class ArtifactLakeSpec extends SparkSpec {
     // from source, not die on the missing path
     val dir = new java.io.File("target/pair-table")
     if (dir.exists()) rm(dir)
-    VerifiedPairs.reset()
+    Artifact.reset()
     val rebuilt = rows(VerifiedPairs.forSfDir(spark, sf0001, 0.5))
     graft.CacheRegistry.release()
     assert(rebuilt == direct, "rebuild after delete diverged")
@@ -47,7 +47,7 @@ class ArtifactLakeSpec extends SparkSpec {
     val directSk = rows(
       graft.multimodal.Multimodal.phashFrames(docs, carry = Seq("lang")))
     graft.CacheRegistry.release()
-    FrameSketchLake.reset()
+    Artifact.reset()
     val artSk = rows(FrameSketchLake.sketches(spark, sf0001))
     assert(artSk == directSk, s"sketch artifact diverged: ${artSk.size} vs ${directSk.size}")
     val artCls = FrameSketchLake.classes(spark, sf0001)
@@ -62,7 +62,7 @@ class ArtifactLakeSpec extends SparkSpec {
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
     val directWin = rows(graft.operators.Dedup.spanWindowSet(docs))
     graft.CacheRegistry.release()
-    graft.sources.SpanWindowLake.reset()
+    Artifact.reset()
     val artWin = rows(graft.sources.SpanWindowLake.windows(spark, sf0001))
     assert(artWin == directWin,
       s"window artifact diverged: ${artWin.size} vs ${directWin.size}")
@@ -76,7 +76,7 @@ class ArtifactLakeSpec extends SparkSpec {
     // delete + reset: next read must rebuild from source
     val dir = new java.io.File("target/span-lake")
     if (dir.exists()) rm(dir)
-    graft.sources.SpanWindowLake.reset()
+    Artifact.reset()
     val rebuilt = rows(graft.sources.SpanWindowLake.windows(spark, sf0001))
     graft.CacheRegistry.release()
     assert(rebuilt == directWin, "rebuild after delete diverged")
@@ -86,7 +86,7 @@ class ArtifactLakeSpec extends SparkSpec {
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
     val direct = rows(graft.operators.TextAnalysis.bigramLogprob(docs))
     graft.CacheRegistry.release()
-    graft.sources.BigramLmLake.reset()
+    Artifact.reset()
     val pd = graft.sources.BigramLmLake.perDoc(spark, sf0001)
     val bc = graft.sources.BigramLmLake.counts(spark, sf0001)
     val lm = graft.sources.BigramLmLake.marginals(spark, sf0001)
@@ -110,7 +110,7 @@ class ArtifactLakeSpec extends SparkSpec {
     // delete + reset: next read must rebuild from source
     val dir = new java.io.File("target/bigram-lake")
     if (dir.exists()) rm(dir)
-    graft.sources.BigramLmLake.reset()
+    Artifact.reset()
     val rebuilt = rows(graft.operators.TextAnalysis.bigramLogprobPrebuilt(docs,
       graft.sources.BigramLmLake.perDoc(spark, sf0001),
       graft.sources.BigramLmLake.counts(spark, sf0001),
@@ -122,7 +122,7 @@ class ArtifactLakeSpec extends SparkSpec {
   test("bucketed LM sinks: content == parquet sink; pin survives catalog; fold needs no exchange") {
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
     // content identity: the bucketed layout is the SAME frame re-laid-out
-    graft.sources.BigramLmLake.reset()
+    Artifact.reset()
     val pd = graft.sources.BigramLmLake.perDoc(spark, sf0001)
     val pdB = graft.sources.BigramLmLake.perDocBucketed(spark, sf0001)
     assert(rows(pdB) == rows(pd), "bucketed bigram sink diverged from parquet sink")
@@ -149,7 +149,7 @@ class ArtifactLakeSpec extends SparkSpec {
     assert(!plan.contains("Exchange hashpartitioning(doc_id"),
       s"doc_id exchange survived the bucketed sink:\n$plan")
     // unigram twin: same three properties
-    graft.sources.UnigramLmLake.reset()
+    Artifact.reset()
     val upd = graft.sources.UnigramLmLake.perDoc(spark, sf0001)
     val updB = graft.sources.UnigramLmLake.perDocBucketed(spark, sf0001)
     assert(rows(updB) == rows(upd), "bucketed unigram sink diverged")
@@ -170,7 +170,7 @@ class ArtifactLakeSpec extends SparkSpec {
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
     val direct = rows(graft.operators.TextAnalysis.unigramLogprob(docs))
     graft.CacheRegistry.release()
-    graft.sources.UnigramLmLake.reset()
+    Artifact.reset()
     val pd = graft.sources.UnigramLmLake.perDoc(spark, sf0001)
     val tf = graft.sources.UnigramLmLake.tf(spark, sf0001)
     val tot = graft.sources.UnigramLmLake.totals(spark, sf0001)
@@ -194,7 +194,7 @@ class ArtifactLakeSpec extends SparkSpec {
     // delete + reset: next read must rebuild from source
     val dir = new java.io.File("target/unigram-lake")
     if (dir.exists()) rm(dir)
-    graft.sources.UnigramLmLake.reset()
+    Artifact.reset()
     val rebuilt = rows(graft.operators.TextAnalysis.unigramLogprobPrebuilt(docs,
       graft.sources.UnigramLmLake.perDoc(spark, sf0001),
       graft.sources.UnigramLmLake.tf(spark, sf0001),
@@ -207,7 +207,7 @@ class ArtifactLakeSpec extends SparkSpec {
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
     val direct = rows(graft.operators.Dedup.ngramNovelty(docs))
     graft.CacheRegistry.release()
-    graft.sources.NgramPostingLake.reset()
+    Artifact.reset()
     val sets = graft.sources.NgramPostingLake.sets(spark, sf0001)
     val dfs = graft.sources.NgramPostingLake.dfStats(spark, sf0001)
     // the serving form over the artifacts == the in-query form
@@ -229,7 +229,7 @@ class ArtifactLakeSpec extends SparkSpec {
     // delete + reset: next read must rebuild from source
     val dir = new java.io.File("target/ngram-lake")
     if (dir.exists()) rm(dir)
-    graft.sources.NgramPostingLake.reset()
+    Artifact.reset()
     val rebuilt = rows(graft.operators.Dedup.ngramNoveltyPrebuilt(docs,
       graft.sources.NgramPostingLake.sets(spark, sf0001),
       graft.sources.NgramPostingLake.dfStats(spark, sf0001)))
@@ -242,7 +242,7 @@ class ArtifactLakeSpec extends SparkSpec {
     val k = graft.operators.TextAnalysis.OovVocabK
     val directOov = rows(graft.operators.TextAnalysis.oovRate(docs, k))
     val directEnc = rows(graft.operators.TextAnalysis.encodeTokens(docs, k))
-    graft.sources.VocabLake.reset()
+    Artifact.reset()
     val v = graft.sources.VocabLake.topK(spark, sf0001, k)
     // the artifact IS the vocabulary() output
     assert(rows(v) == rows(graft.operators.TextAnalysis.vocabulary(docs, k)),
@@ -259,7 +259,7 @@ class ArtifactLakeSpec extends SparkSpec {
     // delete + reset: next read must rebuild from source
     val dir = new java.io.File("target/vocab-lake")
     if (dir.exists()) rm(dir)
-    graft.sources.VocabLake.reset()
+    Artifact.reset()
     val rebuilt = rows(graft.operators.TextAnalysis.oovRateWithVocab(docs,
       graft.sources.VocabLake.topK(spark, sf0001, k)))
     assert(rebuilt == directOov, "rebuild after delete diverged")
@@ -270,7 +270,7 @@ class ArtifactLakeSpec extends SparkSpec {
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
     val direct = rows(graft.operators.Dedup.benchmarkContamination(docs))
     graft.CacheRegistry.release()
-    graft.sources.ShinglePostingLake.reset()
+    Artifact.reset()
     val post = graft.sources.ShinglePostingLake.postings(spark, sf0001)
     val cls = graft.sources.ShinglePostingLake.testClasses(spark, sf0001)
     val mem = graft.sources.ShinglePostingLake.testShingles(spark, sf0001)
@@ -356,7 +356,7 @@ class ArtifactLakeSpec extends SparkSpec {
       // survives even if the pin memo is the only thing consulted — pinned
       // indirectly by both calls succeeding after one reset)
       graft.operators.CorpusPin.reset()
-      graft.operators.Dedup.verifySpanCorpus(docs, win)
+      graft.operators.CorpusPin.check(docs, win, "prewarm")
       graft.operators.Dedup.dupSpanSharePrebuilt(docs, win, dup).collect()
       graft.CacheRegistry.release()
       // media edition: a foreign batch fails with the prop cleared too
@@ -446,5 +446,57 @@ class ArtifactLakeSpec extends SparkSpec {
       System.clearProperty(graft.multimodal.Multimodal.DebugAssertDisjointProp)
       graft.CacheRegistry.release()
     }
+  }
+
+  test("Artifact: two concurrent first readers run the build once and share its dir") {
+    // the lakes' memo must hold the overwrite write to one run per JVM — a
+    // bare TrieMap.getOrElseUpdate evaluates its builder outside any lock,
+    // so two first readers could interleave two writes into one directory
+    val builds = new java.util.concurrent.atomic.AtomicInteger()
+    val art = Artifact("artifact-spec", s"once-${System.nanoTime()}") { (_, _, _) =>
+      builds.incrementAndGet()
+      Thread.sleep(500)
+    }
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val reads = (1 to 2).map(_ => pool.submit(
+        new java.util.concurrent.Callable[String] {
+          def call(): String = { go.await(); art.path(spark, sf0001) }
+        }))
+      go.countDown()
+      val dirs = reads.map(_.get(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(builds.get == 1, s"build ran ${builds.get} times")
+      assert(dirs.toSet == Set(art.dirFor(sf0001)), dirs.toString)
+    } finally pool.shutdown()
+  }
+
+  test("Artifact.reset: the next read of every lake rebuilds it") {
+    // one reset for every lake, IncrementalHistory included: each rebuild is
+    // a new write job, so none of the re-read files may be a pre-reset one
+    val k = graft.operators.TextAnalysis.OovVocabK
+    val lakes: Seq[(String, () => DataFrame)] = Seq(
+      "VerifiedPairs" -> (() => VerifiedPairs.forSfDir(spark, sf0001, 0.5)),
+      "FrameSketchLake" -> (() => FrameSketchLake.sketches(spark, sf0001)),
+      "SpanWindowLake" -> (() => graft.sources.SpanWindowLake.windows(spark, sf0001)),
+      "BigramLmLake" -> (() => graft.sources.BigramLmLake.perDoc(spark, sf0001)),
+      "UnigramLmLake" -> (() => graft.sources.UnigramLmLake.perDoc(spark, sf0001)),
+      "NgramPostingLake" -> (() => graft.sources.NgramPostingLake.sets(spark, sf0001)),
+      "ShinglePostingLake" ->
+        (() => graft.sources.ShinglePostingLake.postings(spark, sf0001)),
+      "VocabLake" -> (() => graft.sources.VocabLake.topK(spark, sf0001, k)),
+      "IncrementalHistory" ->
+        (() => graft.sources.IncrementalHistory.seenHashes(spark, sf0001)),
+      "ScrubbedLake" -> (() => graft.sources.ScrubbedLake.documents(spark, sf0001)),
+      "SortedLake" -> (() => graft.sources.SortedLake.events(spark, sf0001)))
+    try {
+      val before = lakes.map { case (_, read) => read().inputFiles.toSet }
+      Artifact.reset()
+      lakes.zip(before).foreach { case ((name, read), old) =>
+        val now = read().inputFiles.toSet
+        assert(now.nonEmpty && now.intersect(old).isEmpty,
+          s"$name served pre-reset files after reset")
+      }
+    } finally graft.CacheRegistry.release()
   }
 }

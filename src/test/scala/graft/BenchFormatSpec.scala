@@ -31,11 +31,12 @@ class BenchFormatSpec extends AnyFunSuite {
   test("final line carries the budgeted per-query map (verdict r19 #1) and " +
       "STILL fits the driver's 2000-char tail window with the sbt trailer") {
     val qs = (1 to 128).map(i => (f"some_query_name_$i%03d", i * 0.05))
-    val subset = Bench.topQueriesForBudget(qs)
+    // summaryLine budgets the map itself from the full per-query list
     val withQ = Bench.summaryLine(57.0714, 70.5161, 128, Nil,
       "/root/testdata/sf0.1", "4.1.2", "32", 1386200L,
       flags = Seq("relayout:lineitem"), inversions = 0,
-      sentinelSpread = 1.317, queries = subset)
+      sentinelSpread = 1.317, queries = qs)
+    val subset = Bench.topQueriesForBudget(qs, budget = 1300)
     // the r4 failure mode: the full map (~3.0 kB at 3 dp) overran the
     // driver's 2000-char tail and the round lost its headline metric; the
     // budget must leave room for the trailing "[success] Total time..." line
@@ -43,7 +44,7 @@ class BenchFormatSpec extends AnyFunSuite {
     assert(withQ.contains("\"queries\":{\"some_query_name_128\":6.400,"))
     // hottest rows first, deterministic
     assert(subset.head._1 == "some_query_name_128")
-    assert(subset == Bench.topQueriesForBudget(qs.reverse))
+    assert(subset == Bench.topQueriesForBudget(qs.reverse, budget = 1300))
     // an empty map renders NO queries key (subset runs with zero survivors)
     assert(!line.contains("\"queries\""))
   }
@@ -222,5 +223,30 @@ class BenchFormatSpec extends AnyFunSuite {
     assert(wild.contains("\"sf\":\"/tmp/we\\\"ird\\\\dir\""))
     // numeric cpus stays a JSON number (the documented contract form)
     assert(line.contains("\"cpus\":32"))
+  }
+
+  test("a long errors list shrinks the per-query map, never the tail window") {
+    // errors/flags/sf are unbounded: each failed query adds ~25 chars, so a
+    // fixed map budget would push a high-failure line past the 2000-char
+    // tail capture exactly when the errors field matters most
+    val qs = (1 to 128).map(i => (f"some_query_name_$i%03d", i * 0.05))
+    def lineWith(nErr: Int) = Bench.summaryLine(57.0714, 70.5161, 128,
+      (1 to nErr).map(i => f"failing_query_name_$i%03d"),
+      "testdata/sf0.1", "4.1.2", "32", 1386200L,
+      flags = Seq("relayout:lineitem", "warm1_load"), inversions = 3,
+      sentinelSpread = 1.317, queries = qs)
+    Seq(0, 10, 40, 60).foreach { n =>
+      val l = lineWith(n)
+      assert(l.length <= 2000, s"$n errors: line too long (${l.length})")
+      assert(l.contains(f"\"failing_query_name_$n%03d\"") || n == 0,
+        s"$n errors: an error name was dropped")
+    }
+    // the map gives way: fewer entries ride a line with more errors, the
+    // hottest first, and the sbt trailer's slack is kept at every size
+    def entries(l: String) = "some_query_name_".r.findAllMatchIn(l).size
+    val sizes = Seq(0, 10, 40, 60).map(n => entries(lineWith(n)))
+    assert(sizes == sizes.sorted.reverse && sizes.distinct.size == 4, sizes)
+    Seq(0, 10, 40, 60).foreach(n => assert(lineWith(n).length <= 2000 - 100))
+    assert(lineWith(60).contains("\"queries\":{\"some_query_name_128\":6.400"))
   }
 }

@@ -67,4 +67,24 @@ class BucketingSpec extends SparkSpec {
     assert(graft.operators.Bucketing.forSfDir(spark, sf0001, buckets = 8) == ((o8, l8)))
     assert(spark.table(o4).count() == spark.table(o8).count())
   }
+
+  test("the adaptive sweep keeps an explicit-count layout built earlier in the session") {
+    // the scale-adaptive path drops superseded graft_bkt_*_b<N> tables, but a
+    // layout an explicit-count caller built in this JVM is still handed out
+    // by the memo — dropping it would break that caller's next read. A
+    // private copy of the tables gives the sweep keys no other suite built.
+    val dir = new java.io.File("target/bucketing-spec/sweep").getAbsolutePath
+    Seq("orders", "lineitem").foreach { t =>
+      spark.read.parquet(s"$sf0001/$t.parquet")
+        .write.mode("overwrite").parquet(s"$dir/$t.parquet")
+    }
+    val (o3, l3) = Bucketing.forSfDir(spark, dir, buckets = 3)
+    val (oa, la) = Bucketing.forSfDir(spark, dir)
+    assert(oa != o3 && la != l3, s"adaptive layout must differ from b3: $oa")
+    // the caller reads the names it already holds — no second forSfDir call
+    // to rebuild what the sweep dropped
+    assert(spark.table(o3).count() == spark.table(oa).count())
+    assert(spark.table(l3).count() == spark.table(la).count())
+    assert(Bucketing.forSfDir(spark, dir, buckets = 3) == ((o3, l3)))
+  }
 }

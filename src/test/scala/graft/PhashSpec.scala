@@ -301,4 +301,30 @@ class PhashSpec extends SparkSpec {
       s"null-keyed class must merge to n_docs=3: $inc")
     assert(inc.size == 4, s"one row per class: $inc")
   }
+
+  test("classVerdicts refuses a multi-doc probe class absent from the corpus (debug-gated)") {
+    // the solo-owner test is only exact for probe classes inside the corpus
+    // universe; a multi-doc probe class missing from the corpus would fall
+    // back to its own min doc as the owner and hide its other docs' dups
+    val probe = Multimodal.sketchClasses(Multimodal.phashFrames(
+      docs.select(col("doc_id"), col("text"), col("lang")), carry = Seq("lang")))
+    val multi = probe.where(col("n_docs") > 1).limit(1)
+    assert(multi.count() == 1, "fixture should hold a multi-doc sketch class")
+    val corpus = probe.join(multi, Seq("lang", "ahash", "dhash"), "left_anti")
+    System.setProperty(Multimodal.DebugAssertDisjointProp, "true")
+    try {
+      val ex = intercept[IllegalArgumentException](Multimodal.classVerdicts(
+        probe, corpus, 3, Multimodal.PhashCells))
+      assert(ex.getMessage.contains("absent from the corpus"), ex.getMessage)
+      // a corpus that holds every probe class passes (a distinct frame
+      // instance, so the probe ≠ corpus branch runs)
+      Multimodal.classVerdicts(probe, probe.select("*"), 3, Multimodal.PhashCells)
+        .collect()
+    } finally {
+      System.clearProperty(Multimodal.DebugAssertDisjointProp)
+      graft.CacheRegistry.release()
+    }
+    // without the property the check costs nothing: no job, no failure
+    Multimodal.classVerdicts(probe, corpus, 3, Multimodal.PhashCells)
+  }
 }

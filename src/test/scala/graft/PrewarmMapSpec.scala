@@ -2,8 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Gates [[SparkEntry.prewarmQueries]] — the explicit query→prewarm-artifact
-  * map Bench's subset mode reads (ADVICE r14: the old name-substring gating
+/** Gates [[SparkEntry.prewarms]] — the explicit query→prewarm-build list
+  * Bench's subset mode reads (ADVICE r14: the old name-substring gating
   * silently skipped prewarms for renamed queries). Two tripwires:
   *
   *  1. no phantom members — every mapped query must exist in
@@ -18,42 +18,47 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class PrewarmMapSpec extends AnyFunSuite {
 
+  private def members(name: String): Set[String] =
+    SparkEntry.prewarms.find(_.name == name).map(_.queries)
+      .getOrElse(fail(s"no prewarm named '$name'"))
+
   test("every prewarm-map member is a declared query (no phantom names)") {
     val qs = SparkEntry.queries.keySet
-    SparkEntry.prewarmQueries.foreach { case (fam, members) =>
-      val missing = members.diff(qs)
-      assert(missing.isEmpty, s"prewarm family '$fam' references unknown queries: $missing")
+    SparkEntry.prewarms.foreach { p =>
+      val missing = p.queries.diff(qs)
+      assert(missing.isEmpty, s"prewarm '${p.name}' references unknown queries: $missing")
     }
   }
 
   test("family sets match the legacy name heuristics over the current query set") {
     val qs = SparkEntry.queries.keySet
     def legacy(p: String => Boolean): Set[String] = qs.filter(p)
-    assert(SparkEntry.prewarmQueries("ivf") ===
+    assert(members("ivf") ===
       legacy(n => n.startsWith("knn_") || n.startsWith("ann_") ||
         n.startsWith("ivf_") || n.startsWith("multimodal_") ||
         n == "near_dup_ivf" || n == "contrast_near_dup_fixed_block" ||
         n == "hybrid_rrf" || n == "rerank_cosine"))
-    assert(SparkEntry.prewarmQueries("pq") === legacy(_.contains("pq")))
-    assert(SparkEntry.prewarmQueries("sq8") === legacy(_.contains("sq8")))
-    assert(SparkEntry.prewarmQueries("lsh") === legacy(_.contains("lsh")))
-    assert(SparkEntry.prewarmQueries("inc-history") ===
+    assert(members("pq") === legacy(_.contains("pq")))
+    assert(members("pq-ivf") === legacy(_.contains("pq")))
+    assert(members("sq8") === legacy(_.contains("sq8")))
+    assert(members("lsh") === legacy(_.contains("lsh")))
+    assert(members("inc-history") ===
       legacy(n => n.contains("_inc") || n == "dedup_incremental" ||
         n == "dedup_bloom"))
-    assert(SparkEntry.prewarmQueries("ivf-dedup-block") === Set("near_dup_ivf"))
-    assert(SparkEntry.prewarmQueries("ivf-tune") === Set("ivf_tuned_probe"))
+    assert(members("ivf-dedup-block") === Set("near_dup_ivf"))
+    assert(members("ivf-tune") === Set("ivf_tuned_probe"))
     // the verified-pair artifact's consumers (verdict r15 #4): exactly the
     // full-corpus shingle-family rows that read VerifiedPairs.forSfDir —
     // enumerated by hand because no name pattern distinguishes them
     // (contamination_flags and ngram_novelty share the family but never
     // touch the pair table)
-    assert(SparkEntry.prewarmQueries("pair-table") === Set("ngram_jaccard",
+    assert(members("pair-table") === Set("ngram_jaccard",
       "dedup_survivors", "split_leak_pairs", "near_dup_clusters",
       "split_assign_leakfree", "corpus_curate"))
     // the full-corpus frame-sketch lake (r16): the two rows that scan the
     // ingest-sink sketch table / its compaction-view class quotient
     // (frame_dup_share_inc stays on the IncrementalHistory history split)
-    assert(SparkEntry.prewarmQueries("phash-lake") ===
+    assert(members("phash-lake") ===
       Set("phash_docs", "near_dup_frames"))
   }
 }
