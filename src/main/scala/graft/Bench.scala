@@ -413,7 +413,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftEngine.harnessCores
     // SPARK_GRAFT_ONLY: comma-separated query-name subset for TARGETED scaled
     // diagnostics (e.g. the sf100 serving/media/dedup families, where the
     // untargeted rest would cost hours of wall for no additional signal).
@@ -421,54 +421,12 @@ object Bench {
     // can never masquerade as a full-suite number; unknown names fail loudly
     // (a typo must not silently time nothing); the streaming arm is skipped
     // (a partial record is a batch diagnostic). Prewarms run only for the
-    // families the subset touches — a missed prewarm is visible (the first
+    // queries the subset selects — a missed prewarm is visible (the first
     // query of the family pays the build inside its own timing), never wrong.
     val onlySubset: Option[Set[String]] =
-      sys.env.get("SPARK_GRAFT_ONLY").map { s =>
-        val names = s.split(",").map(_.trim).filter(_.nonEmpty).toSet
-        val unknown = names.diff(SparkEntry.queries.keySet)
-        require(unknown.isEmpty, "SPARK_GRAFT_ONLY names not in " +
-          s"SparkEntry.queries: ${unknown.toSeq.sorted.mkString(", ")}")
-        names
-      }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // guide §3.1/§9 (r19 optimization round): allow the planner to pick a
-      // shuffled-hash join where its size conditions hold instead of always
-      // sort-merge — the mid-size equi-joins (fact ⋈ fact-rollup) pay two
-      // avoidable sorts under SMJ. Size-guarded by the planner itself (the
-      // build side must fit per partition), so it degrades to SMJ at scale
-      // exactly where SMJ is right; AQE can additionally convert at runtime
-      // below the local-map threshold. Measured at sf10 solo: q03 5.5→5.1,
-      // q11 1.85→1.60, q23 2.04→1.81, q26 1.08→1.01 — consistent single-
-      // digit-% wins across the join family, no regressions.
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "256m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // cap the SQL status store: the default retains 1000 executions' plan
-      // graphs + metric maps, and a 90-query × 2-pass suite otherwise ages
-      // the heap with listener state the bench never reads (measured as a
-      // uniform ~30% warm-pass slowdown on allocation-heavy text queries)
-      .config("spark.sql.ui.retainedExecutions", "16")
-      // r10 diagnosis of the r8 warm-pass inflation, from the jvm snapshots
-      // this harness now publishes: (a) the default 100-entry generated-class
-      // cache recompiled ~1,333 Janino classes PER PASS on a 111-query suite
-      // (cold and warm identical — pure churn) and dragged ~50 s of JIT
-      // thread time through every warm pass; size the cache to hold the
-      // whole suite's generated classes so warm passes compile ~nothing
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      // (b) live heap grew 83→456 MB across passes with per-pass GC cost
-      // rising 1.5→3.9 s: the core status store still retained 1000 jobs /
-      // 1000 stages / 100k tasks of listener state the bench never reads
-      .config("spark.ui.retainedJobs", "200")
-      .config("spark.ui.retainedStages", "200")
-      .config("spark.ui.retainedTasks", "20000")
-      .getOrCreate()
+      sys.env.get("SPARK_GRAFT_ONLY").map(SparkEntry.queryFilter)
+    val spark = GraftEngine.session(cpus, "graft-bench",
+      GraftEngine.SuiteJoinPlanning ++ GraftEngine.StatusStoreCaps)
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.GraftFunctions.register(spark)
 
@@ -542,13 +500,14 @@ object Bench {
 
     // offline index and lake builds — not part of query timing (reference
     // times search only; index load/build is IVFIndex::from_pretrained,
-    // outside the timer). Membership comes from the explicit query→build
-    // list next to SparkEntry.queries (ADVICE r14: the old name-substring
-    // heuristics silently un-prewarmed any renamed query). Each build's
-    // fill cost is reported on its prewarm line (verdict r15 #4) and its
-    // persisted subtrees are released so nothing stays pinned into timing.
+    // outside the timer). A build runs when a selected query lists it in
+    // its QueryDef (ADVICE r14: the old name-substring heuristics silently
+    // un-prewarmed any renamed query). Each build's fill cost is reported
+    // on its prewarm line (verdict r15 #4) and its persisted subtrees are
+    // released so nothing stays pinned into timing.
+    val selected = SparkEntry.queryDefs.filter(q => onlySubset.forall(_(q.name)))
     SparkEntry.prewarms
-      .filter(p => onlySubset.forall(_.exists(p.queries)))
+      .filter(p => selected.exists(_.prewarms.contains(p)))
       .foreach { p =>
         try {
           val t0 = System.nanoTime()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.operators.{IvfIndex, KnnExact}
 
 /** The reference's experiment protocol (`run_multiple_configs.sh` +
@@ -19,14 +17,7 @@ object Experiment {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val k = args.lift(1).map(_.toInt).getOrElse(10)
     val runs = args.lift(2).map(_.toInt).getOrElse(5)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-experiment")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftEngine.session(GraftEngine.harnessCores, "graft-experiment")
     spark.sparkContext.setLogLevel("ERROR")
 
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")

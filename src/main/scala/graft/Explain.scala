@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: run the flagship entry, show selected physical plans, and verify
   * the scale-critical plan properties (partition pruning on the IVF fine scan,
   * broadcast joins on dim tables, pushed filters on parquet scans).
@@ -11,18 +9,9 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.tail.toSeq else Seq("knn_ivf_full", "q03_region_revenue")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-explain")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      // mirror the bench's join planning so printed plans match what runs
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "256m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // plans printed under the bench's join planning, at a fixed 8
+    // partitions so the audit table is comparable across machines
+    val spark = GraftEngine.session("8", "graft-explain", GraftEngine.SuiteJoinPlanning)
     spark.sparkContext.setLogLevel("ERROR")
     graft.functions.GraftFunctions.register(spark)
 

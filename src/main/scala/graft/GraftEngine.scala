@@ -509,13 +509,51 @@ object GraftEngine {
       .partitionBy(partitionCols: _*)
       .parquet(outDir)
 
-  /** Recommended local session (mirrors Verify/Bench conf; a cluster deploy
-    * sets the same confs minus master). */
-  def localSession(cores: Int = 8, appName: String = "graft"): SparkSession =
-    SparkSession.builder()
+  /** `SPARK_GRAFT_CPUS`, read once for every harness main (Bench, Verify,
+    * ScaleProbe, Experiment): a core count or `*`. Unset, it is the number
+    * of cores this JVM sees, so a run without it verifies under the same
+    * partition count it benches with. */
+  lazy val harnessCores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
+
+  /** Join planning shared by the harnesses that time, verify or print the
+    * suite's plans (Bench, Verify, Explain), so correctness is verified and
+    * plans are printed under the strategies timing runs with. Lets the
+    * planner pick a shuffled-hash join where its size conditions hold
+    * instead of always sort-merge: mid-size equi-joins (fact ⋈ fact-rollup)
+    * pay two avoidable sorts under SMJ, and the build side must fit per
+    * partition, so it degrades to SMJ at scale exactly where SMJ is right.
+    * AQE may also convert at runtime below the local-map threshold.
+    * Measured at sf10 solo: q03 5.5→5.1 s, q11 1.85→1.60 s, q23 2.04→1.81 s,
+    * q26 1.08→1.01 s. */
+  val SuiteJoinPlanning: Map[String, String] = Map(
+    "spark.sql.join.preferSortMergeJoin" -> "false",
+    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold" -> "256m")
+
+  /** Status-store caps for long harness runs: by default the SQL store
+    * keeps 1,000 executions' plan graphs and the core store 1,000 jobs,
+    * 1,000 stages and 100k tasks the harness never reads. Across a 127-query
+    * multi-pass run that ages the heap (measured: live heap 83→456 MB,
+    * per-pass GC 1.5→3.9 s, a uniform ~30% warm slowdown on
+    * allocation-heavy text queries). */
+  val StatusStoreCaps: Map[String, String] = Map(
+    "spark.sql.ui.retainedExecutions" -> "16",
+    "spark.ui.retainedJobs" -> "200",
+    "spark.ui.retainedStages" -> "200",
+    "spark.ui.retainedTasks" -> "20000")
+
+  /** The one session builder: a local session on `cores` (a count or `*`)
+    * with one shuffle partition per core, AQE, UTC, nanosecond parquet
+    * timestamps read as longs (events.parquet), no UI, a sized codegen
+    * cache, and then `extra`. */
+  def session(cores: String, appName: String,
+      extra: Map[String, String] = Map.empty): SparkSession = {
+    val partitions =
+      if (cores == "*") Runtime.getRuntime.availableProcessors.toString else cores
+    val builder = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(appName)
-      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.shuffle.partitions", partitions)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -526,5 +564,12 @@ object GraftEngine {
       // ~1,300 recompiles/pass on the 113-query suite, 2-4× warm-query
       // inflation) — size it to the workload
       .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
+    extra.foreach { case (k, v) => builder.config(k, v) }
+    builder.getOrCreate()
+  }
+
+  /** Recommended local session (a cluster deploy sets the same confs minus
+    * master). */
+  def localSession(cores: Int = 8, appName: String = "graft"): SparkSession =
+    session(cores.toString, appName)
 }

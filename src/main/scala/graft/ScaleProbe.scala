@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   */
 object ScaleProbe {
 
-  /** 100-language marker table for the lang-id cost-model probe pair — the
+  /** 100-language marker table for the lang-id cost-model probe — the
     * SAME deterministic generator as PropertySpec's parity property (4 own
     * markers per language, every 7th language re-claims a neighbor's first
     * marker, mirroring the real de/zh and es/fr marker collisions). */
@@ -70,16 +70,9 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val replication = args.lift(1).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .appName("graft-scale-probe")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ui.retainedExecutions", "16")
-      .getOrCreate()
+    val cpus = GraftEngine.harnessCores
+    val spark = GraftEngine.session(cpus, "graft-scale-probe",
+      GraftEngine.StatusStoreCaps)
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.GraftFunctions.register(spark)
     spark.sparkContext.setCheckpointDir("target/scale-probe-ckpt")
@@ -318,17 +311,10 @@ object ScaleProbe {
       // LangIdExpr's cost model at a PRODUCTION-size marker table (100
       // languages × 4-5 markers, same deterministic generator as the parity
       // property in PropertySpec): the one-pass expression does tokens × 1
-      // hash lookups regardless of table width, the composed per-language
-      // argmax walks the token array once PER language — this pair turns
-      // the scaladoc's claimed gap into a measured number over the scaled
-      // corpus (both forms return 'und' on corpus tokens; a miss still
-      // pays each form's full walk, which is exactly the cost under test)
+      // hash lookups regardless of table width (the result is 'und' on
+      // corpus tokens; a miss still pays the full walk)
       "lang_id_expr_100" -> (() => noop(docs.select(col("doc_id"),
         graft.functions.GraftFunctions.langId(
-          graft.functions.GraftFunctions.tokens(col("text")), BigMarkers)
-          .as("lang_pred")))),
-      "lang_id_composed_100" -> (() => noop(docs.select(col("doc_id"),
-        graft.functions.GraftFunctions.langIdComposed(
           graft.functions.GraftFunctions.tokens(col("text")), BigMarkers)
           .as("lang_pred")))))
 

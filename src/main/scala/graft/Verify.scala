@@ -1,42 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Correctness dump: each declared query's result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated query-name filter (builder iteration
-    // on one query without the full 100-query dump); absent = run everything.
-    // Names are trimmed and MUST each match a declared query — a typo'd
-    // filter would otherwise dump nothing for that name and the comparator
-    // would vacuously PASS on what remains (review r11)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet) else None
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"unknown query name(s) in filter: ${unknown.toSeq.sorted.mkString(", ")}")
-    }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // joins planned like the bench (guide §3.1 — correctness must be
-      // verified under the same join strategies timing runs with)
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "256m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // same status-store cap as Bench: a 90-query dump run accumulates
-      // listener plan graphs the harness never reads
-      .config("spark.sql.ui.retainedExecutions", "16")
-      // same generated-class cache sizing as Bench (r10): a 112-query run
-      // generates ~1,300+ distinct codegen classes; the 100-entry default
-      // recompiles them continuously
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
+    // on one query without the full dump); absent = run everything. Every
+    // name must be declared ([[SparkEntry.queryFilter]])
+    val only: Option[Set[String]] = args.lift(2).map(SparkEntry.queryFilter)
+    val spark = GraftEngine.session(GraftEngine.harnessCores, "graft-verify",
+      GraftEngine.SuiteJoinPlanning ++ GraftEngine.StatusStoreCaps)
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.GraftFunctions.register(spark)
     new java.io.File(outDir).mkdirs()

@@ -245,19 +245,6 @@ object GraftFunctions {
     ExpressionUtils.column(
       PositionalFingerprint(ExpressionUtils.expression(words)))
 
-  /** The composed formulation (pre-r19) — retained as the executable spec
-    * [[fingerprint]] is parity-tested against (PortableHashSpec); also the
-    * shape the DuckDB oracle replays (1-based generate_subscripts). */
-  private[graft] def fingerprintComposed(words: Column): Column =
-    aggregate(
-      // index-lambda transform: `words` is a direct child (evaluated once per
-      // row); i is 0-based so hash (i+1)#token for parity with the 1-based
-      // generate_subscripts oracle
-      transform(words, (w, i) =>
-        h60(concat((i + 1).cast("string"), lit("#"), w))),
-      lit(0L),
-      (acc, h) => acc.bitwiseXOR(h))
-
   // -------------------------------------------------------- language id
   // Deterministic marker-token heuristic (the corpus is synthetic word soup; a
   // real n-gram profile model would plug in at the same column boundary). Scored
@@ -268,9 +255,6 @@ object GraftFunctions {
     * one source of truth for engine and oracle. */
   val langMarkers: Seq[(String, Seq[String])] = LangIdExpr.Markers
 
-  private def markerCount(words: Column, markers: Seq[String]): Column =
-    size(filter(words, w => markers.map(m => w === lit(m)).reduce(_ || _)))
-
   /** Best-scoring language code, 'und' when no marker hits at all (incl.
     * on a NULL token array — matching the composed form's fall-through) —
     * one array pass with a marker→languages hash lookup ([[LangIdExpr]];
@@ -278,7 +262,8 @@ object GraftFunctions {
     * token array once PER language, which a production-size marker table
     * can't afford). The marker table is injectable (compile-time constant
     * per plan) so the 100-language cost model is exercisable;
-    * [[langIdComposed]] keeps the composed form for the parity spec. */
+    * the parity spec keeps the composed form (GraftFunctionsComposed in the
+    * tests). */
   def langId(words: Column,
       markers: Seq[(String, Seq[String])] = langMarkers): Column =
     ExpressionUtils.column(LangIdExpr(ExpressionUtils.expression(words), markers))
@@ -289,12 +274,6 @@ object GraftFunctions {
     * the sf10 suite ([[NormalizeTextExpr]] has the equivalence argument). */
   def normalizeText(text: Column): Column =
     ExpressionUtils.column(NormalizeTextExpr(ExpressionUtils.expression(text)))
-
-  /** The composed formulation (pre-r14 implementation) — retained as the
-    * executable spec [[normalizeText]] is parity-tested against; also the
-    * exact shape the DuckDB oracle replays. */
-  private[graft] def normalizeTextComposed(text: Column): Column =
-    trim(regexp_replace(regexp_replace(lower(text), "[^a-z0-9 ]", " "), "  +", " "))
 
   /** Both token counts of `tok_count_bpe` — `STRUCT<n_ws, n_bpe>` — in one
     * byte pass (no split-array materialization, no regex engine;
@@ -330,21 +309,6 @@ object GraftFunctions {
     * argument against the explode → groupBy → sorted-fold chain). */
   def tokenEntropyStats(text: Column): Column =
     ExpressionUtils.column(TokenEntropyExpr(ExpressionUtils.expression(text)))
-
-  /** The composed Column formulation (pre-r10 implementation) — retained as
-    * the executable spec [[langId]] is parity-tested against, at any
-    * injected marker table. */
-  private[graft] def langIdComposed(words: Column,
-      markers: Seq[(String, Seq[String])] = langMarkers): Column = {
-    val scored = markers.map { case (code, ms) => (code, markerCount(words, ms)) }
-    val best = scored.map(_._2).reduce((a, b) => greatest(a, b))
-    // argmax with ties to first (alphabetical-ish declared order)
-    val pick = scored.foldRight(lit("und")) { case ((code, score), acc) =>
-      when(score === best && best > 0, lit(code)).otherwise(acc)
-    }
-    // foldRight means earlier entries override later ones on ties
-    pick
-  }
 
   // ------------------------------------------------- bloom runtime filter
 

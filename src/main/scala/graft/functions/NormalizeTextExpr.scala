@@ -18,8 +18,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * (51.9 s over 500k docs, `text_norm`). This walks the UTF-8 bytes once and
   * allocates only the output buffer. Same replace-a-regex-chain move as
   * [[PiiScrubSeq]] and [[LangIdExpr]]; the composed form is retained as the
-  * executable spec ([[GraftFunctions.normalizeTextComposed]], parity-tested
-  * in NormalizeSpec including non-ASCII).
+  * executable spec (`GraftFunctionsComposed.normalizeTextComposed` in the
+  * tests, parity-tested in NormalizeSpec including non-ASCII).
   *
   * Equivalence argument (byte pass vs the char-level regex):
   *  - ASCII input: `lower` only folds A-Z, which the pass does inline; every

@@ -583,7 +583,7 @@ object IvfIndex {
 
   // ------------------------------------------------- tuned serving point
 
-  private val tunedCache = scala.collection.concurrent.TrieMap.empty[String, Int]
+  private[graft] val tunedCache = scala.collection.concurrent.TrieMap.empty[String, Int]
 
   /** The recall-tuned nProbe for a (sfDir, k, floor) serving config —
     * [[IvfIndex.tuneNProbe]] made load-bearing (verdict r8 #4): one analytic

@@ -6,7 +6,7 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 import graft.functions.BpeCountsExpr
-import graft.operators.TextAnalysis
+import graft.operators.{TextAnalysis, TextAnalysisComposed}
 
 /** Gates [[BpeCountsExpr]]'s one-pass byte walk against the two things it
   * replaces: `size(split(text, " "))` keep-trailing-empties semantics for
@@ -14,7 +14,7 @@ import graft.operators.TextAnalysis
   * [[TextAnalysis.BpeTokenRegex]] for `n_bpe` — the same
   * parity-over-the-replaced-spec discipline as NormalizeSpec, plus a
   * DataFrame-level identity pass (new expression vs the retained composed
-  * form [[TextAnalysis.tokenCountsBpeComposed]]) over real testdata. */
+  * form [[TextAnalysisComposed.tokenCountsBpeComposed]]) over real testdata. */
 class BpeCountsSpec extends SparkSpec {
 
   private val pattern = java.util.regex.Pattern.compile(TextAnalysis.BpeTokenRegex)
@@ -86,7 +86,7 @@ class BpeCountsSpec extends SparkSpec {
   test("DataFrame identity: expression form == composed form on real docs") {
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
     val fast = TextAnalysis.tokenCountsBpe(docs)
-    val slow = TextAnalysis.tokenCountsBpeComposed(docs)
+    val slow = TextAnalysisComposed.tokenCountsBpeComposed(docs)
     assert(fast.schema == slow.schema)
     assert(fast.exceptAll(slow).isEmpty && slow.exceptAll(fast).isEmpty)
   }

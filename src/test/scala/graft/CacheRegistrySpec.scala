@@ -35,12 +35,12 @@ class CacheRegistrySpec extends SparkSpec {
   }
 
   test("orderedQueries is a permutation of queries with contiguous families") {
-    val ordered = SparkEntry.orderedQueries.map(_._1)
-    assert(ordered.toSet == SparkEntry.queries.keySet &&
+    val ordered = SparkEntry.orderedQueries
+    assert(ordered.map(_.name).toSet == SparkEntry.queries.keySet &&
       ordered.size == SparkEntry.queries.size,
       "family ordering must run every declared query exactly once")
     // every family's members are adjacent (one release point per family)
-    val familyRuns = ordered.map(n => SparkEntry.cacheFamily.get(n))
+    val familyRuns = ordered.map(_.family)
       .foldLeft(List.empty[Option[String]]) {
         case (acc, f) if acc.headOption.contains(f) => acc
         case (acc, f) => f :: acc
@@ -48,8 +48,6 @@ class CacheRegistrySpec extends SparkSpec {
     val families = familyRuns.flatten
     assert(families.distinct.size == families.size,
       s"a cache family runs in non-contiguous blocks: $familyRuns")
-    // the family map only names real queries (a typo would silently ungroup)
-    assert(SparkEntry.cacheFamily.keySet.subsetOf(SparkEntry.queries.keySet))
   }
 
   test("release is an idempotent no-op when nothing is registered") {

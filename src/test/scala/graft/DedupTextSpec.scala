@@ -180,7 +180,8 @@ class DedupTextSpec extends SparkSpec {
     // argmax (r10); parity over the real corpus plus tie/ambiguity docs
     // ("la" counts for es AND fr — declared order must win ties; "de" for
     // de AND zh)
-    import graft.functions.GraftFunctions.{langId, langIdComposed, tokens}
+    import graft.functions.GraftFunctions.{langId, tokens}
+    import graft.functions.GraftFunctionsComposed.langIdComposed
     val corpus = spark.read.parquet(s"$sf0001/documents.parquet")
       .select(col("doc_id"), col("text"))
     val tricky = Seq(

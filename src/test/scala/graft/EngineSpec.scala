@@ -14,13 +14,23 @@ class EngineSpec extends SparkSpec {
     assert(rows.forall(_.getAs[String]("snippet").length <= 200))
   }
 
-  test("every declared oracle has a matching query") {
-    // keyed render: the legacy singleton form would (rightly) throw once any
-    // OTHER suite in this shared JVM has built IVF artifacts for a second
-    // scale dir (OracleRenderSpec does, by design)
-    val missing = SparkEntry.oracleSqlFor(spark, sf0001).keySet --
-      SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracles without queries: $missing")
+  test("two query records with one name are refused") {
+    val q01 = SparkEntry.queryDefs.find(_.name == "q01_pricing_summary").get
+    def twin = SparkEntry.QueryDef(q01.name)(q01.run, q01.oracle)
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.requireUniqueNames(Seq(q01, twin)))
+    assert(e.getMessage.contains("q01_pricing_summary"))
+    assert(SparkEntry.queries.size == SparkEntry.queryDefs.size,
+      "the declared records must have unique names")
+  }
+
+  test("a query-name filter trims, drops blanks and names an unknown name") {
+    assert(SparkEntry.queryFilter(" q01_pricing_summary ,,knn_exact") ==
+      Set("q01_pricing_summary", "knn_exact"))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.queryFilter("q01_pricing_summary,q01_pricing_sumary"))
+    assert(e.getMessage.contains("q01_pricing_sumary"))
+    assert(!e.getMessage.contains("q01_pricing_summary"))
   }
 
   test("q01 pricing summary: 6 flag/status groups, counts sum to filtered rows") {

@@ -5,7 +5,7 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
-import graft.functions.{GraftFunctions, NormalizeTextExpr}
+import graft.functions.{GraftFunctions, GraftFunctionsComposed, NormalizeTextExpr}
 
 /** [[graft.functions.NormalizeTextExpr]]'s contract: byte-for-byte equal to
   * the composed `trim(regexp_replace(regexp_replace(lower(text),
@@ -35,7 +35,7 @@ class NormalizeSpec extends SparkSpec {
 
   private def composedOf(texts: Seq[String]): Seq[String] =
     texts.toDF("text")
-      .select(GraftFunctions.normalizeTextComposed(col("text")))
+      .select(GraftFunctionsComposed.normalizeTextComposed(col("text")))
       .as[String].collect().toSeq
 
   private def exprOf(texts: Seq[String]): Seq[String] =
@@ -64,7 +64,7 @@ class NormalizeSpec extends SparkSpec {
     val df = Seq[(Integer, String)]((1, "A b"), (2, null)).toDF("id", "text")
     val both = df.select(
       GraftFunctions.normalizeText(col("text")).as("fast"),
-      GraftFunctions.normalizeTextComposed(col("text")).as("slow"))
+      GraftFunctionsComposed.normalizeTextComposed(col("text")).as("slow"))
       .collect()
     assert(both.forall(r => r.isNullAt(0) == r.isNullAt(1) &&
       (r.isNullAt(0) || r.getString(0) == r.getString(1))))
@@ -88,7 +88,7 @@ class NormalizeSpec extends SparkSpec {
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
     val mism = docs.select(
       GraftFunctions.normalizeText(col("text")).as("fast"),
-      GraftFunctions.normalizeTextComposed(col("text")).as("slow"))
+      GraftFunctionsComposed.normalizeTextComposed(col("text")).as("slow"))
       .filter(not(col("fast") <=> col("slow"))).count()
     assert(mism == 0L)
     // direct interpreted-path call (no codegen) on a few shapes

@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+import java.util.Comparator
+
 import graft.operators.{IvfIndex, PqQuant}
 
 /** Verdict r10 #2: the oracle render is keyed by (sfDir, config). Two scale
@@ -49,6 +52,28 @@ class OracleRenderSpec extends SparkSpec {
     assert(one.keySet == Set("q01_pricing_summary"))
     assert(one("q01_pricing_summary") ==
       SparkEntry.oracleSqlFor(spark, sf0001)("q01_pricing_summary"))
+  }
+
+  test("a filtered render pays for no oracle literal it does not render") {
+    // a private copy of sf0.001, so no other suite has built an index, run
+    // the tuner or counted the dedup blocks for this dir
+    val src = Paths.get(sf0001)
+    val dst = Paths.get("target", "oracle-render-spec", "sf0.001").toAbsolutePath
+    val sfDir = dst.toString
+    val exportDir = Paths.get(IvfIndex.exportPathFor(sfDir, SparkEntry.NumClusters))
+    Seq(dst, exportDir).filter(Files.exists(_)).foreach { d =>
+      Files.walk(d).sorted(Comparator.reverseOrder[Path]()).forEach(Files.delete(_))
+    }
+    Files.createDirectories(dst.getParent)
+    Files.walk(src).forEach(f => Files.copy(f, dst.resolve(src.relativize(f))))
+
+    val one = SparkEntry.oracleSqlFor(spark, sfDir, Some(Set("q01_pricing_summary")))
+    assert(one.keySet == Set("q01_pricing_summary"))
+    assert(!Files.exists(exportDir), s"the render built an IVF index: $exportDir")
+    assert(!IvfIndex.tunedCache.keys.exists(_.startsWith(s"$sfDir#")),
+      "the render ran the nProbe tuner")
+    assert(!SparkEntry.dedupBlockK.contains(sfDir),
+      "the render counted the dedup blocks")
   }
 
   test("keyed renders stay stable after queries ran for two configs") {

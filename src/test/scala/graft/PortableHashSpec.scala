@@ -62,7 +62,8 @@ class PortableHashSpec extends SparkSpec {
   test("positionalFingerprint == composed transform+aggregate chain") {
     // r19 optimization round: fused kernel identity on random token lists
     // (incl. empties, dup tokens, multi-byte) + the real corpus
-    import graft.functions.GraftFunctions.{fingerprint, fingerprintComposed, tokens}
+    import graft.functions.GraftFunctions.{fingerprint, tokens}
+    import graft.functions.GraftFunctionsComposed.fingerprintComposed
     val rnd = new scala.util.Random(13)
     val vocab = Vector("a", "bb", "ccc", "the", "", "中文", "x1")
     val docs = Seq.fill(300)(

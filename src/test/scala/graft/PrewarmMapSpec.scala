@@ -2,32 +2,22 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Gates [[SparkEntry.prewarms]] — the explicit query→prewarm-build list
-  * Bench's subset mode reads (ADVICE r14: the old name-substring gating
-  * silently skipped prewarms for renamed queries). Two tripwires:
-  *
-  *  1. no phantom members — every mapped query must exist in
-  *     [[SparkEntry.queries]], so a rename that forgets the map fails here
-  *     instead of silently paying an index build inside its first timing;
-  *  2. heuristic parity — each family set must equal what the legacy
-  *     substring heuristic selects over the CURRENT query set, so adding a
-  *     query whose name pattern-matches a family forces a conscious map
-  *     decision (if a future pattern-matching query genuinely needs no
-  *     prewarm, amend the heuristic here alongside the map — the point is
-  *     the decision is explicit, never silent).
+/** Gates the prewarm references in [[SparkEntry.queryDefs]] — the
+  * query→prewarm-build links Bench's subset mode reads (ADVICE r14: the old
+  * name-substring gating silently skipped prewarms for renamed queries).
+  * Heuristic parity: each prewarm's member set, read off the records, must
+  * equal what the legacy substring heuristic selects over the CURRENT query
+  * set, so adding a query whose name pattern-matches a family forces a
+  * conscious decision (if a future pattern-matching query genuinely needs no
+  * prewarm, amend the heuristic here alongside the record — the point is the
+  * decision is explicit, never silent).
   */
 class PrewarmMapSpec extends AnyFunSuite {
 
-  private def members(name: String): Set[String] =
-    SparkEntry.prewarms.find(_.name == name).map(_.queries)
+  private def members(name: String): Set[String] = {
+    val p = SparkEntry.prewarms.find(_.name == name)
       .getOrElse(fail(s"no prewarm named '$name'"))
-
-  test("every prewarm-map member is a declared query (no phantom names)") {
-    val qs = SparkEntry.queries.keySet
-    SparkEntry.prewarms.foreach { p =>
-      val missing = p.queries.diff(qs)
-      assert(missing.isEmpty, s"prewarm '${p.name}' references unknown queries: $missing")
-    }
+    SparkEntry.queryDefs.filter(_.prewarms.contains(p)).map(_.name).toSet
   }
 
   test("family sets match the legacy name heuristics over the current query set") {
@@ -60,5 +50,8 @@ class PrewarmMapSpec extends AnyFunSuite {
     // (frame_dup_share_inc stays on the IncrementalHistory history split)
     assert(members("phash-lake") ===
       Set("phash_docs", "near_dup_frames"))
+    // a prewarm no query lists would never run, not even in a full bench
+    SparkEntry.prewarms.foreach(p =>
+      assert(members(p.name).nonEmpty, s"prewarm '${p.name}' has no query"))
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
-import graft.functions.GraftFunctions
+import graft.functions.{GraftFunctions, GraftFunctionsComposed}
 import graft.operators.SqQuant
 
 /** Property-based invariants of the scalar math, checked over ScalaCheck-
@@ -155,7 +155,7 @@ class PropertySpec extends SparkSpec {
     forAll(wordsGen, 40) { ws =>
       val df = Seq(Tuple1(ws)).toDF("w")
       val got = df.select(GraftFunctions.langId(col("w"))).head.getString(0)
-      val want = df.select(GraftFunctions.langIdComposed(col("w"))).head.getString(0)
+      val want = df.select(GraftFunctionsComposed.langIdComposed(col("w"))).head.getString(0)
       assert(got == want, s"words $ws: expr=$got composed=$want")
     }
   }
@@ -167,7 +167,7 @@ class PropertySpec extends SparkSpec {
       .toDF("w")
     val rows = df.select(
         GraftFunctions.langId(col("w")).as("fast"),
-        GraftFunctions.langIdComposed(col("w")).as("slow"))
+        GraftFunctionsComposed.langIdComposed(col("w")).as("slow"))
       .collect()
     assert(rows(0).getString(0) == "und", "expr must map null array to und")
     assert(rows(0).getString(1) == "und", "composed must map null array to und")
@@ -197,7 +197,7 @@ class PropertySpec extends SparkSpec {
     val rows = samples.map(Tuple1(_)).toDF("w")
       .select(col("w"),
         GraftFunctions.langId(col("w"), big).as("fast"),
-        GraftFunctions.langIdComposed(col("w"), big).as("slow"))
+        GraftFunctionsComposed.langIdComposed(col("w"), big).as("slow"))
       .collect()
     rows.foreach { r =>
       assert(r.getString(1) == r.getString(2),

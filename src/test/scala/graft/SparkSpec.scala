@@ -12,18 +12,7 @@ import org.scalatest.time.{Minutes, Span}
 /** Shared local session for all suites (one JVM under Test/fork). */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // 29 suites share this JVM; the 100-entry default generated-class
-      // cache would recompile Janino classes continuously across them (the
-      // r10 bench diagnosis — same lesson, test-time edition)
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
+    val s = GraftEngine.session("4", "graft-test")
     s.sparkContext.setLogLevel("ERROR")
     graft.functions.GraftFunctions.register(s)
     s

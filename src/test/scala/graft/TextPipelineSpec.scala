@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.TextAnalysis
+import graft.operators.{TextAnalysis, TextAnalysisComposed}
 
 /** PII scrubbing + repetition metrics on synthetic docs where the expected
   * values are computable by hand (the driver-gate oracle only exercises the
@@ -247,7 +247,7 @@ class TextPipelineSpec extends SparkSpec {
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
     for ((c, s) <- Seq((4, 3), (7, 7), (64, 48))) {
       val fast = TextAnalysis.chunk(docs, c = c, s = s)
-      val slow = TextAnalysis.chunkComposed(docs, c = c, s = s)
+      val slow = TextAnalysisComposed.chunkComposed(docs, c = c, s = s)
       assert(fast.schema.map(f => (f.name, f.dataType)) ==
         slow.schema.map(f => (f.name, f.dataType)))
       assert(fast.exceptAll(slow).isEmpty && slow.exceptAll(fast).isEmpty,

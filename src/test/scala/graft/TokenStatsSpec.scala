@@ -6,7 +6,7 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 import graft.functions.TokenStatsExpr
-import graft.operators.TextAnalysis
+import graft.operators.{TextAnalysis, TextAnalysisComposed}
 
 /** Gates [[TokenStatsExpr]]'s one-pass count-table walk against the composed
   * HOF chain it replaced, field by field (split keep-trailing-empties token
@@ -79,7 +79,7 @@ class TokenStatsSpec extends SparkSpec {
   test("DataFrame identity: quality == composed form on real docs") {
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
     val fast = TextAnalysis.quality(docs)
-    val slow = TextAnalysis.qualityComposed(docs)
+    val slow = TextAnalysisComposed.qualityComposed(docs)
     assert(fast.schema == slow.schema)
     assert(fast.exceptAll(slow).isEmpty && slow.exceptAll(fast).isEmpty)
   }
@@ -87,7 +87,7 @@ class TokenStatsSpec extends SparkSpec {
   test("DataFrame identity: corpusFilter == composed form on real docs") {
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
     val fast = TextAnalysis.corpusFilter(docs)
-    val slow = TextAnalysis.corpusFilterComposed(docs)
+    val slow = TextAnalysisComposed.corpusFilterComposed(docs)
     assert(fast.schema == slow.schema)
     assert(fast.exceptAll(slow).isEmpty && slow.exceptAll(fast).isEmpty)
   }
@@ -95,7 +95,7 @@ class TokenStatsSpec extends SparkSpec {
   test("DataFrame identity: repetition == composed (shuffled) form on real docs") {
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
     val fast = TextAnalysis.repetition(docs)
-    val slow = TextAnalysis.repetitionComposed(docs)
+    val slow = TextAnalysisComposed.repetitionComposed(docs)
     assert(fast.schema == slow.schema)
     assert(fast.exceptAll(slow).isEmpty && slow.exceptAll(fast).isEmpty)
   }
@@ -201,7 +201,7 @@ class TokenStatsSpec extends SparkSpec {
   test("DataFrame identity: tokenEntropy == composed (shuffled) form on real docs") {
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
     val fast = TextAnalysis.tokenEntropy(docs)
-    val slow = TextAnalysis.tokenEntropyComposed(docs)
+    val slow = TextAnalysisComposed.tokenEntropyComposed(docs)
     // names+types (not nullability: `count` is non-nullable where a struct
     // field fanned out through explode is not — the gate compares names,
     // types and values)
@@ -221,7 +221,7 @@ class TokenStatsSpec extends SparkSpec {
     val df = Seq[(Integer, String)]((1, "a b a"), (2, null)).toDF("doc_id", "text")
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
     val fast = TextAnalysis.tokenEntropy(df).collect()
-    val slow = TextAnalysis.tokenEntropyComposed(df).collect()
+    val slow = TextAnalysisComposed.tokenEntropyComposed(df).collect()
     assert(fast.map(_.toString).sorted.sameElements(slow.map(_.toString).sorted))
     assert(fast.length == 1 && fast(0).getLong(0) == 1L)
   }
