@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
 import graft.functions.{Embedder, GraftFunctions}
 import graft.operators.{Bpe, BqQuant, Dedup, IvfIndex, KnnExact, LshAnn, PqQuant, Relational, Retrieval, SqQuant, TextAnalysis, TrainingMix}
@@ -66,18 +67,36 @@ final class GraftEngine(val spark: SparkSession,
       k: Int = 5, nProbe: Int = 20): DataFrame =
     search(index, embedder.embed(queryText), k, nProbe)
 
-  /** Doc fetch join (reference mapBack, IVF.cpp:44-119): top-k ids → text,
-    * broadcast the k-row side, substring projection (IVF.cpp:697-699). */
+  /** Doc fetch (reference mapBack, IVF.cpp:44-119): top-k ids → text, with
+    * the substring projection (IVF.cpp:697-699). A point lookup, not a join:
+    * the ≤ k result rows are collected once, the documents scan reads only
+    * `doc_id IN (ids)` (pushed to the parquet row groups) with the snippet
+    * projected inside it, and the k rows are joined and ordered on the
+    * driver — one job, no exchange. Returns a local frame
+    * `(vec_id, sim, snippet)` with inner-join semantics (a hit without a
+    * document is dropped; a duplicated doc_id yields one row per copy),
+    * ordered sim DESC, vec_id ASC. */
   def searchDocs(results: DataFrame, documents: DataFrame,
-      snippetLen: Int = 200): DataFrame =
-    broadcast(results)
-      .join(documents, results("vec_id") === documents("doc_id"))
-      .select(results("vec_id"), results("sim"),
-        substring(col("text"), 1, snippetLen).as("snippet"))
-      .orderBy(desc("sim"), asc("vec_id"))
+      snippetLen: Int = 200): DataFrame = {
+    val hits = results.select(col("vec_id").cast("long"), col("sim").cast("double"))
+      .collect().filterNot(_.isNullAt(0))
+    val ids = hits.map(_.getLong(0)).distinct.toSeq
+    val snippets =
+      if (ids.isEmpty) Map.empty[Long, Array[String]]
+      else documents.where(col("doc_id").isin(ids: _*))
+        .select(col("doc_id").cast("long"), substring(col("text"), 1, snippetLen))
+        .collect()
+        .groupMap(_.getLong(0))(_.getString(1))
+    val rows = hits
+      .flatMap(h => snippets.getOrElse(h.getLong(0), Array.empty[String])
+        .map(t => Row(h.get(0), h.get(1), t)))
+      .sortBy(r => (r.isNullAt(1), if (r.isNullAt(1)) 0.0 else r.getDouble(1), r.getLong(0)))(
+        Ordering.Tuple3(Ordering.Boolean, Ordering.Double.TotalOrdering.reverse, Ordering.Long))
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
+      StructField("vec_id", LongType), StructField("sim", DoubleType),
+      StructField("snippet", StringType))))
+  }
 
-  /** Batched IVF serving: one pruned union scan for a whole query table
-    * (`query_id, embedding`), per-query bounded-heap top-k. */
   /** Filtered ANN: [[search]] with a metadata predicate pushed inside the
     * pruned scan (pre-filter semantics — always k results when the filtered
     * neighborhood has them, never a thinned post-filter list). */
@@ -86,6 +105,8 @@ final class GraftEngine(val spark: SparkSession,
       nProbe: Int = 4): DataFrame =
     index.searchFiltered(query, k, nProbe, predicate)
 
+  /** Batched IVF serving: one pruned union scan for a whole query table
+    * (`query_id, embedding`), per-query bounded-heap top-k. */
   def searchBatch(index: IvfIndex, queries: DataFrame, k: Int = 5,
       nProbe: Int = 20): DataFrame =
     index.searchBatch(queries, k, nProbe)

@@ -27,6 +27,18 @@ import graft.functions.GraftFunctions.cosineSim
   * `PartitionFilters` in the physical plan, so a 1000-executor cluster reads only
   * nProbe/k of the data — exactly the reference's IVF pruning, but executed by
   * Parquet partition pruning instead of hand-managed files.
+  *
+  * Open once, serve many (the reference opens its index once, `IVF.cpp:489-530`,
+  * then runs its query loop): a handle pins ONE resolved snapshot of the
+  * inverted file — a parquet relation whose file index already holds the
+  * listing and the schema — so every search, report and recall tool prunes
+  * and scans it with no listing or schema job per call. The handle's own
+  * writes ([[mergeSegment]], [[compact]]) re-resolve the snapshot after their
+  * last file operation, so the writer sees its rows. Any other handle — one
+  * opened earlier, by another caller or in another process — keeps reading
+  * exactly the files it resolved, and sees a write only after it is
+  * re-opened ([[IvfIndex.load]]). A file that a [[compact]] swap removed
+  * fails such a stale reader loudly (`FILE_NOT_EXIST`), never silently.
   */
 final case class IvfIndex(
     spark: SparkSession,
@@ -36,8 +48,29 @@ final case class IvfIndex(
     /** (cluster id, centroid) pairs, driver-local. k×dim floats — tiny. */
     centroids: Array[(Int, Array[Float])]) {
 
-  /** The inverted file: partition-pruned reads via the `cluster` column. */
-  def vectors: DataFrame = spark.read.parquet(indexDir)
+  @volatile private var snapshot: IvfIndex.Snapshot = _
+
+  /** The current snapshot; a handle made without one ([[IvfIndex.build]],
+    * `copy`, the bare constructor) resolves it on first use. */
+  private def current: IvfIndex.Snapshot = {
+    if (snapshot == null) pin(spark.read.parquet(indexDir))
+    snapshot
+  }
+
+  /** Pin `files` (a resolved read of `indexDir`) as this handle's snapshot. */
+  private def pin(files: DataFrame): this.type = {
+    snapshot = new IvfIndex.Snapshot(files, dim)
+    this
+  }
+
+  /** Re-resolve after this handle's own write. The layout's schema is the
+    * snapshot's, so only the file listing runs, not the footer-schema job. */
+  private def repin(): Unit =
+    pin(spark.read.schema(current.files.schema).parquet(indexDir))
+
+  /** The inverted file: partition-pruned reads via the `cluster` column, over
+    * this handle's pinned snapshot. */
+  def vectors: DataFrame = current.files
 
   /** Coarse search (`IVF.cpp:271-282`): top-nProbe centroids by cosine similarity.
     * Runs on the driver over k rows — the only non-distributed step, by design.
@@ -94,12 +127,15 @@ final case class IvfIndex(
     * probe ≡ flat SQ8. This is what the fine phase of a 100 TB deployment
     * actually scans: quantized codes inside pruned partitions. Pass
     * `codebook` ([[SqQuant.statsForSfDir]] over the same vectors) to scan
-    * with literal stats — without it every call re-aggregates the index for
-    * its per-dimension min/max (round-4 review item #3). */
+    * with literal stats — without it the codebook is aggregated over the
+    * snapshot once, on the first such call, and reused until a write
+    * re-resolves the snapshot. */
   def searchQuantized(query: Array[Float], k: Int, nProbe: Int,
-      codebook: Option[(Array[Double], Array[Double])] = None): DataFrame =
-    SqQuant.search(probed(query, nProbe), query, k, dim,
-      Some(codebook.getOrElse(SqQuant.stats(vectors, dim))))
+      codebook: Option[(Array[Double], Array[Double])] = None): DataFrame = {
+    val snap = current
+    SqQuant.search(probed(snap, query, nProbe), query, k, dim,
+      Some(codebook.getOrElse(snap.sq8)))
+  }
 
   /** Batched IVF search — the 100 TB serving shape: amortize ONE pruned scan
     * over a whole query batch instead of one scan per query (the reference
@@ -301,6 +337,7 @@ final case class IvfIndex(
       .write.mode("append")
       .partitionBy("cluster")
       .parquet(indexDir)
+    repin()
   }
 
   /** Compact over-fragmented cluster partitions — the maintenance op daily
@@ -316,8 +353,12 @@ final case class IvfIndex(
     * rename — per-cluster swap, not a global atomic cutover (a reader
     * racing the swap of one cluster should use the [[maintain]] →
     * [[IvfIndex.publishLatest]] versioned path instead; compaction is the
-    * cheap in-place arm for single-writer maintenance windows). Row set,
-    * assignments, and every search result are invariants (IvfSpec-gated).
+    * cheap in-place arm for single-writer maintenance windows). A reader
+    * holding an older snapshot of a compacted cluster fails with
+    * `FILE_NOT_EXIST` rather than reading it partially. The fragmented
+    * clusters are read from a fresh listing, not this handle's snapshot, so
+    * files appended by another writer are kept. Row set, assignments, and
+    * every search result are invariants (IvfSpec-gated).
     * Returns the compacted cluster ids. */
   def compact(maxFilesPerCluster: Int = 1): Seq[Int] = {
     require(maxFilesPerCluster >= 1, s"maxFilesPerCluster: $maxFilesPerCluster")
@@ -359,7 +400,7 @@ final case class IvfIndex(
         indexDir.stripSuffix("/") + "-compacting")
       // hash-repartition by cluster: each fragmented cluster lands wholly in
       // one task, so partitionBy writes exactly one file per cluster
-      vectors.where(col("cluster").isin(frag.map(Int.box): _*))
+      spark.read.parquet(indexDir).where(col("cluster").isin(frag.map(Int.box): _*))
         .select(col("vec_id"), col("label"), col("embedding"), col("cluster"))
         .repartition(frag.size, col("cluster"))
         .write.mode("overwrite").partitionBy("cluster").parquet(tmp.toString)
@@ -385,6 +426,7 @@ final case class IvfIndex(
       }
       fs.delete(tmp, true)
     }
+    repin()
     frag
   }
 
@@ -437,8 +479,8 @@ final case class IvfIndex(
   /** The pruned fine-scan input (`IVF.cpp:286-435`): the inverted file
     * restricted to the query's top-nProbe clusters — `PartitionFilters` on
     * the scan, not a full scan. */
-  private def probed(query: Array[Float], nProbe: Int): DataFrame =
-    vectors.where(col("cluster").isin(coarseProbes(query, nProbe): _*))
+  private def probed(snap: IvfIndex.Snapshot, query: Array[Float], nProbe: Int): DataFrame =
+    snap.files.where(col("cluster").isin(coarseProbes(query, nProbe): _*))
 
   /** Fine search (`IVF.cpp:286-435`, both "sequential" and "combined" variants —
     * Spark's per-partition partial top-k + merge in TakeOrderedAndProject is the
@@ -448,7 +490,7 @@ final case class IvfIndex(
     * Returns `(vec_id, label, sim)`, sim DESC, vec_id ASC (declared tie-break).
     */
   def search(query: Array[Float], k: Int, nProbe: Int): DataFrame =
-    KnnExact.topK(probed(query, nProbe), query, k)
+    KnnExact.topK(probed(current, query, nProbe), query, k)
 
   /** Filtered ANN — [[search]] with a metadata predicate applied INSIDE the
     * pruned scan (the vector-DB "filtered search" / pre-filter form): the
@@ -459,10 +501,16 @@ final case class IvfIndex(
     * The predicate must reference the layout's columns (e.g. `label`). */
   def searchFiltered(query: Array[Float], k: Int, nProbe: Int,
       predicate: org.apache.spark.sql.Column): DataFrame =
-    KnnExact.topK(probed(query, nProbe).where(predicate), query, k)
+    KnnExact.topK(probed(current, query, nProbe).where(predicate), query, k)
 }
 
 object IvfIndex {
+
+  /** One resolved read of an index dir, plus what is derived from it: the
+    * default SQ8 codebook is aggregated at most once per snapshot. */
+  private final class Snapshot(val files: DataFrame, dim: Int) {
+    lazy val sq8: (Array[Double], Array[Double]) = SqQuant.stats(files, dim)
+  }
 
   /** Coarse search (`IVF.cpp:271-282`) as a pure function: top-nProbe
     * centroids by cosine against the query, driver-local over k rows. Shared
@@ -578,7 +626,7 @@ object IvfIndex {
               r.getAs[Seq[Double]]("centroid").map(_.toFloat).toArray)
           }
       }
-    IvfIndex(spark, indexDir, cents.length, dim, cents)
+    IvfIndex(spark, indexDir, cents.length, dim, cents).pin(df)
   }
 
   // ------------------------------------------------- tuned serving point

@@ -21,10 +21,12 @@ object KnnExact {
       // an unrounded sort would diverge on near-ties). IvfIndex.search and
       // searchFiltered are this over the pruned scan; LshAnn / SqQuant
       // follow the same order over their own scores.
-      .withColumn("sim", round(cosineSim(col("embedding"), typedLit(query)), 6))
+      // one projection, then sort + limit: each Dataset step is one more
+      // analyzer pass on the serving path
+      .select(col("vec_id"), col("label"),
+        round(cosineSim(col("embedding"), typedLit(query)), 6).as("sim"))
       .orderBy(desc("sim"), asc("vec_id"))
       .limit(k)
-      .select(col("vec_id"), col("label"), col("sim"))
 
   /** Fetch the query vector by id — queries are data, not code (SURVEY §1.3):
     * a 1-row lookup collected to the driver as the query parameter. */

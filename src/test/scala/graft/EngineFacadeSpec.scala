@@ -35,10 +35,22 @@ class EngineFacadeSpec extends SparkSpec {
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
     val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
     val q = graft.operators.KnnExact.queryVector(emb, 3L)
-    val out = engine.searchDocs(engine.knnExact(emb, q, 5), docs).collect()
+    val knn = engine.knnExact(emb, q, 5)
+    val hits = spark.createDataFrame(java.util.Arrays.asList(knn.collect(): _*), knn.schema)
+    // a point fetch: one job reads the k ids' rows, nothing else runs
+    val (fetched, jobs) = JobCounter(spark)(engine.searchDocs(hits, docs))
+    assert(jobs == 1, s"doc fetch started $jobs jobs")
+    val out = fetched.collect()
     assert(out.length == 5)
     assert(out.head.getAs[Long]("vec_id") == 3L)
     assert(out.forall(_.getAs[String]("snippet").length <= 200))
+    // same rows, columns and order as the join it replaces
+    import org.apache.spark.sql.functions._
+    val joined = hits.join(docs, hits("vec_id") === docs("doc_id"))
+      .select(hits("vec_id"), hits("sim"), substring(col("text"), 1, 200).as("snippet"))
+      .orderBy(desc("sim"), asc("vec_id")).collect()
+    assert(fetched.columns.toSeq == Seq("vec_id", "sim", "snippet"))
+    assert(out.toSeq == joined.toSeq, s"${out.mkString(",")} vs ${joined.mkString(",")}")
   }
 
   test("exportCorpus writes split-partitioned, sorted, skippable parquet") {

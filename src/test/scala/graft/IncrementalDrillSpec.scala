@@ -341,18 +341,26 @@ class IncrementalDrillSpec extends SparkSpec with IterativeTimeLimit {
       // (verdict r12 #4): merge-only days compact INSIDE the drill — the
       // production cadence — instead of only as a post-drill coda. While
       // the per-cluster rename swaps run, a reader thread keeps searching
-      // the serving index. The declared contract (IvfIndex.compact
-      // scaladoc) allows a racing reader a STALE or PARTIAL view — a
-      // cluster is invisible between its two renames — but never a corrupt
-      // one: every (vec_id, sim) any successful read returns must agree
-      // with brute force over the ingested union, with no duplicate ids.
+      // the serving index. The declared contract (IvfIndex scaladoc): the
+      // reader's handle is pinned to the files it resolved, so each read
+      // either scans every one of them — and equals brute force over the
+      // ingested union — or fails loudly with FILE_NOT_EXIST on a file a
+      // swap moved away. Never a silently partial or corrupt answer: every
+      // (vec_id, sim) a read returns must agree with brute force, with no
+      // duplicate ids.
       if (day != 2) {
         val simAll = KnnExact.topK(cumEmb, qv, 1000000).collect()
           .map(r => (r.getLong(0), r.getAs[Double]("sim"))).toMap
         val corrupt = new java.util.concurrent.ConcurrentLinkedQueue[String]
-        val partials = new java.util.concurrent.atomic.AtomicInteger
+        val partial = new java.util.concurrent.ConcurrentLinkedQueue[String]
+        val unexpected = new java.util.concurrent.ConcurrentLinkedQueue[String]
+        val failed = new java.util.concurrent.atomic.AtomicInteger
         val reads = new java.util.concurrent.atomic.AtomicInteger
         val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+        def fileNotExist(e: Throwable): Boolean =
+          Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists(t =>
+            t.isInstanceOf[java.io.FileNotFoundException] ||
+              String.valueOf(t.getMessage).contains("FILE_NOT_EXIST"))
         val reader = new Thread(() => {
           while (!stop.get()) {
             try {
@@ -365,12 +373,11 @@ class IncrementalDrillSpec extends SparkSpec with IterativeTimeLimit {
               }
               if (res.map(_._1).distinct.length != res.length)
                 corrupt.add(s"duplicate ids: ${res.map(_._1).mkString(",")}")
-              if (!res.map(_._1).sameElements(exact.map(_._1)))
-                partials.incrementAndGet()
+              if (!res.sameElements(exact)) partial.add(res.mkString(","))
             } catch {
-              // a scan whose file listing predates a swap can hit the
-              // renamed-away file mid-execution — transient by contract
-              case _: Exception => partials.incrementAndGet()
+              case e: Exception =>
+                failed.incrementAndGet()
+                if (!fileNotExist(e)) unexpected.add(e.toString.take(300))
             }
           }
         })
@@ -382,7 +389,13 @@ class IncrementalDrillSpec extends SparkSpec with IterativeTimeLimit {
         assert(corrupt.isEmpty,
           s"day $day: concurrent reader saw corrupt rows: " +
             corrupt.toArray.take(5).mkString(", "))
-        assert(reads.get() + partials.get() > 0, "reader thread never ran")
+        assert(partial.isEmpty,
+          s"day $day: ${partial.size} of ${reads.get()} successful reads differ from exact: " +
+            partial.toArray.take(2).mkString(" | "))
+        assert(unexpected.isEmpty,
+          s"day $day: reads failed other than FILE_NOT_EXIST: " +
+            unexpected.toArray.take(2).mkString(" | "))
+        assert(reads.get() + failed.get() > 0, "reader thread never ran")
         // and the post-compaction steady state is exactly right again
         val fresh = served.search(qv, 10, nProbe = 8).collect()
           .map(r => (r.getLong(0), r.getAs[Double]("sim")))

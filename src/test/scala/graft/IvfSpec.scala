@@ -18,6 +18,22 @@ class IvfSpec extends SparkSpec {
     assert(ivf.sameElements(exact))
   }
 
+  test("a held handle plans search, searchFiltered and searchBatch with no Spark job") {
+    // the handle's pinned snapshot already holds the file listing and the
+    // schema, so building and planning a request re-lists nothing (a handle
+    // that re-opens per call starts the footer-schema job, and a listing job
+    // too once the index has more than 32 cluster dirs)
+    idx.vectors
+    import spark.implicits._
+    val queries = Seq((0L, qv.toSeq)).toDF("query_id", "embedding")
+    val jobs = Seq[() => org.apache.spark.sql.DataFrame](
+      () => idx.search(qv, 10, 4),
+      () => idx.searchFiltered(qv, 10, 4, col("label") >= 0),
+      () => idx.searchBatch(queries, 10, 4)
+    ).map(req => JobCounter(spark)(req().queryExecution.executedPlan)._2)
+    assert(jobs == Seq(0, 0, 0), s"jobs started per request (search, filtered, batch): $jobs")
+  }
+
   test("recall@10 is monotone nondecreasing in nProbe") {
     val exact = KnnExact.topK(emb, qv, 10).select("vec_id").collect().map(_.getLong(0)).toSet
     val recalls = Seq(1, 4, 8, 16).map { p =>
@@ -201,6 +217,7 @@ class IvfSpec extends SparkSpec {
     val base = emb.where(col("vec_id") % 10 =!= 0)
     val seg = emb.where(col("vec_id") % 10 === 0)
     val idx = IvfIndex.build(spark, base, dir, numClusters = 8)
+    val earlier = IvfIndex.load(spark, dir) // a second handle, opened before the merge
     val baseCounts = idx.vectors.groupBy("cluster").count().collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
     val segHist = idx.assignNew(seg).groupBy("cluster").count().collect()
@@ -225,6 +242,12 @@ class IvfSpec extends SparkSpec {
     assert(got.sameElements(exact),
       s"merged full-probe search diverged:\n got ${got.mkString(",")}\n " +
         s"want ${exact.mkString(",")}")
+    // the handle contract: the merge is visible to the writing handle (above)
+    // and to a fresh open, not to a handle resolved before it
+    assert(earlier.vectors.count() == base.count(),
+      "a handle opened before the merge must keep its pre-merge snapshot")
+    assert(IvfIndex.load(spark, dir).vectors.count() == emb.count(),
+      "a fresh load must see the merged rows")
   }
 
   test("compact: fragmented clusters collapse to one file; rows and search invariant") {

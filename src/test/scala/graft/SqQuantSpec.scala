@@ -45,6 +45,12 @@ class SqQuantSpec extends SparkSpec {
     val ivf = idx.searchQuantized(qv, 10, nProbe = SparkEntry.NumClusters)
       .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
     assert(ivf == flat, s"quantized IVF full-probe diverges: $ivf vs $flat")
+    // the default codebook is aggregated once per snapshot: a second
+    // codebook-less call starts no job and returns the same rows
+    val (again, jobs) = JobCounter(spark)(
+      idx.searchQuantized(qv, 10, nProbe = SparkEntry.NumClusters))
+    assert(jobs == 0, s"second codebook-less call started $jobs jobs")
+    assert(again.collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq == ivf)
     val plan = idx.searchQuantized(qv, 10, nProbe = 3)
       .queryExecution.executedPlan.toString
     assert("PartitionFilters: \\[[^\\]]*cluster".r.findFirstIn(plan).isDefined,
