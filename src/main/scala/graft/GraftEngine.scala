@@ -41,9 +41,10 @@ final class GraftEngine(val spark: SparkSession,
     * exercises end-to-end): publish a built version behind the atomic
     * LATEST pointer, open whatever the pointer currently names, and bound
     * the root's storage by reclaiming superseded versions (`keep` rollback
-    * targets retained; the serving copy is never touched). Daily ingest and
-    * in-place maintenance live on the index itself ([[IvfIndex.maintain]] /
-    * [[IvfIndex.compact]]). */
+    * targets retained; the serving copy is never touched). Daily ingest
+    * lives on the index itself ([[IvfIndex.mergeSegment]] /
+    * [[IvfIndex.maintain]]); a rebuild or an [[IvfIndex.compact]] writes a
+    * new version that `publishIndex` cuts over to. */
   def publishIndex(rootName: String, index: IvfIndex): Unit =
     IvfIndex.publishLatest(spark, s"$workDir/$rootName", index.indexDir)
   def openLatest(rootName: String): IvfIndex =

@@ -33,12 +33,14 @@ import graft.functions.GraftFunctions.cosineSim
   * inverted file — a parquet relation whose file index already holds the
   * listing and the schema — so every search, report and recall tool prunes
   * and scans it with no listing or schema job per call. The handle's own
-  * writes ([[mergeSegment]], [[compact]]) re-resolve the snapshot after their
-  * last file operation, so the writer sees its rows. Any other handle — one
-  * opened earlier, by another caller or in another process — keeps reading
-  * exactly the files it resolved, and sees a write only after it is
-  * re-opened ([[IvfIndex.load]]). A file that a [[compact]] swap removed
-  * fails such a stale reader loudly (`FILE_NOT_EXIST`), never silently.
+  * append ([[mergeSegment]]) re-resolves the snapshot after its write, so
+  * the writer sees its rows. Any other handle — one opened earlier, by
+  * another caller or in another process — keeps reading exactly the files
+  * it resolved, and sees a write only after it is re-opened
+  * ([[IvfIndex.load]]). No operation removes or replaces a file inside a
+  * version: a rewrite ([[compact]], [[maintain]]'s rebuild) writes a NEW
+  * version directory, [[IvfIndex.publishLatest]] cuts readers over, and
+  * only [[IvfIndex.gcVersions]] deletes a superseded version.
   */
 final case class IvfIndex(
     spark: SparkSession,
@@ -340,94 +342,34 @@ final case class IvfIndex(
     repin()
   }
 
-  /** Compact over-fragmented cluster partitions — the maintenance op daily
+  /** Compaction as a version cutover — the maintenance op daily
     * [[mergeSegment]]s make necessary: every merge appends up to one file
     * per touched cluster, so after N days a cluster holds up to N small
     * files and probe-pruned scans degrade to file-open overhead (the
-    * classic small-file problem — at daily 100 TB ingest the dominant
-    * read-amplification term). Each cluster whose parquet file count
-    * exceeds `maxFilesPerCluster` has its rows rewritten as ONE file;
-    * clusters under the threshold are never read, so the cost is
-    * ∝ fragmented-cluster bytes, not index bytes. The rewrite stages into a
-    * sibling temp dir and swaps each compacted cluster directory via FS
-    * rename — per-cluster swap, not a global atomic cutover (a reader
-    * racing the swap of one cluster should use the [[maintain]] →
-    * [[IvfIndex.publishLatest]] versioned path instead; compaction is the
-    * cheap in-place arm for single-writer maintenance windows). A reader
-    * holding an older snapshot of a compacted cluster fails with
-    * `FILE_NOT_EXIST` rather than reading it partially. The fragmented
-    * clusters are read from a fresh listing, not this handle's snapshot, so
-    * files appended by another writer are kept. Row set, assignments, and
-    * every search result are invariants (IvfSpec-gated).
-    * Returns the compacted cluster ids. */
-  def compact(maxFilesPerCluster: Int = 1): Seq[Int] = {
-    require(maxFilesPerCluster >= 1, s"maxFilesPerCluster: $maxFilesPerCluster")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = root.getFileSystem(conf)
-    // Crash recovery BEFORE anything else touches aside dirs: a prior run
-    // that died between rename(dst, aside) and rename(src, dst) left the
-    // cluster's ONLY copy in a dot-prefixed aside dir Spark's file index
-    // ignores — searches would silently drop those vectors, and the
-    // per-cluster pre-emptive aside delete below could destroy the copy.
-    // Restore any aside whose cluster= sibling is missing; an aside WITH a
-    // live sibling is always redundant (asides are deleted immediately
-    // after a successful move-in, so a surviving pair means the compacted
-    // full copy already landed) and is cleaned up here.
-    fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory &&
-        s.getPath.getName.startsWith(".cluster=") &&
-        s.getPath.getName.endsWith(".compacted-away"))
-      .foreach { s =>
-        val c = s.getPath.getName
-          .stripPrefix(".").stripSuffix(".compacted-away")
-        val dst = new org.apache.hadoop.fs.Path(root, c)
-        if (!fs.exists(dst)) {
-          if (!fs.rename(s.getPath, dst)) throw new java.io.IOException(
-            s"compact: orphaned aside ${s.getPath} could not be restored " +
-              "— index is missing this cluster's rows; manual restore needed")
-        } else fs.delete(s.getPath, true)
-      }
-    def parquetCount(p: org.apache.hadoop.fs.Path): Int =
-      fs.listStatus(p).count(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-    val frag = fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("cluster="))
-      .collect { case s if parquetCount(s.getPath) > maxFilesPerCluster =>
-        s.getPath.getName.stripPrefix("cluster=").toInt }
-      .sorted
-    if (frag.nonEmpty) {
-      val tmp = new org.apache.hadoop.fs.Path(
-        indexDir.stripSuffix("/") + "-compacting")
-      // hash-repartition by cluster: each fragmented cluster lands wholly in
-      // one task, so partitionBy writes exactly one file per cluster
-      spark.read.parquet(indexDir).where(col("cluster").isin(frag.map(Int.box): _*))
-        .select(col("vec_id"), col("label"), col("embedding"), col("cluster"))
-        .repartition(frag.size, col("cluster"))
-        .write.mode("overwrite").partitionBy("cluster").parquet(tmp.toString)
-      // swap via move-aside + move-in, CHECKING every rename: Hadoop
-      // FileSystem.rename signals most failures by returning false, and a
-      // delete-then-rename sequence that ignored it would silently lose the
-      // cluster (then the tmp cleanup would destroy the only copy). With
-      // the aside step the rows exist on disk at every instant — a failed
-      // move-in restores the original and aborts loudly (review r12).
-      frag.foreach { c =>
-        val dst = new org.apache.hadoop.fs.Path(root, s"cluster=$c")
-        val src = new org.apache.hadoop.fs.Path(tmp, s"cluster=$c")
-        val aside = new org.apache.hadoop.fs.Path(root, s".cluster=$c.compacted-away")
-        fs.delete(aside, true) // stale aside from a crashed prior run
-        if (!fs.rename(dst, aside)) throw new java.io.IOException(
-          s"compact: could not move aside $dst — layout unchanged")
-        if (!fs.rename(src, dst)) {
-          fs.rename(aside, dst) // restore; original rows still intact
-          throw new java.io.IOException(
-            s"compact: could not move $src into place — original restored")
-        }
-        fs.delete(aside, true)
-      }
-      fs.delete(tmp, true)
+    * classic small-file problem). When any cluster holds more than one
+    * file, every row is rewritten into `versionDir` with one file per
+    * cluster and the SAME centroids, and a handle on that version is
+    * returned; otherwise this handle is returned unchanged (the same no-op
+    * convention as [[maintain]]'s no-rebuild arm). Nothing under
+    * `indexDir` is moved or deleted: the caller makes the new version
+    * visible with [[IvfIndex.publishLatest]], handles on the old version keep
+    * serving their files, and [[IvfIndex.gcVersions]] reclaims the old
+    * directory. The rows come from a fresh listing of `indexDir`, not this
+    * handle's snapshot, so files another writer appended are kept. The
+    * rewrite costs O(index), not O(fragmented clusters); after daily merges
+    * nearly every cluster is fragmented, so the two are close. Row set,
+    * assignments and every search result are invariants (IvfSpec-gated). */
+  def compact(versionDir: String): IvfIndex = {
+    // the snapshot's schema: only the listing runs, not the footer-schema job
+    val fresh = spark.read.schema(current.files.schema).parquet(indexDir)
+    val fragmented = fresh.inputFiles
+      .groupBy(f => new org.apache.hadoop.fs.Path(f).getParent.getName)
+      .exists(_._2.length > 1)
+    if (!fragmented) this
+    else {
+      IvfIndex.writeVersion(spark, fresh, versionDir, numClusters, centroids)
+      IvfIndex(spark, versionDir, numClusters, dim, centroids)
     }
-    repin()
-    frag
   }
 
   /** Merge-then-rebuild-when-skewed — the maintenance policy [[balanceReport]]
@@ -435,9 +377,11 @@ final case class IvfIndex(
     * hottest cluster's load factor exceeds `maxLoadFactor` (1.0 = perfectly
     * balanced), re-cluster the WHOLE merged index into `rebuildDir` via
     * [[IvfIndex.build]] — the reference's offline rebuild, triggered by a
-    * measured condition instead of an operator's calendar. Rebuild writes to a
-    * sibling versioned dir (never in-place: the build scans the very layout it
-    * would be overwriting); production flips a pointer at publish time.
+    * measured condition instead of an operator's calendar. Rebuild writes a
+    * new version dir (never in-place: the build scans the very layout it
+    * would be overwriting), the same cutover as [[compact]]: the caller
+    * publishes it with [[IvfIndex.publishLatest]] and old handles keep
+    * serving until [[IvfIndex.gcVersions]] reclaims the old version.
     * Returns (servingIndex, rebuilt?). The load-factor read is a k-row
     * aggregate; the rebuild arm costs a full K-means — which is the point of
     * gating it. */
@@ -559,8 +503,21 @@ object IvfIndex {
       .setPredictionCol("cluster")
       .fit(withVec)
 
-    model.transform(withVec)
-      .select(col("vec_id"), col("label"), col("embedding"), col("cluster"))
+    val dim = model.clusterCenters.headOption.map(_.size).getOrElse(0)
+    val cents = model.clusterCenters.zipWithIndex.map { case (v, i) =>
+      (i, v.toArray.map(_.toFloat))
+    }
+    writeVersion(spark, model.transform(withVec), indexDir, numClusters, cents)
+    IvfIndex(spark, indexDir, numClusters, dim, cents)
+  }
+
+  /** Write one index version — the unit [[publishLatest]] serves and
+    * [[gcVersions]] reclaims: the partitioned inverted file at `dir` plus its
+    * `-centroids` sibling. [[build]] and [[IvfIndex.compact]] both write
+    * through here, so the layout has one owner. */
+  private def writeVersion(spark: SparkSession, rows: DataFrame, dir: String,
+      numClusters: Int, cents: Array[(Int, Array[Float])]): Unit = {
+    rows.select(col("vec_id"), col("label"), col("embedding"), col("cluster"))
       // co-locate each cluster's rows before the partitioned write: one
       // compact file per cluster instead of one shard per (task × cluster) —
       // 3× fewer files here, and at 100 TB the difference between a
@@ -569,17 +526,11 @@ object IvfIndex {
       .repartition(numClusters, col("cluster"))
       .write.mode("overwrite")
       .partitionBy("cluster") // directory-per-cluster == the inverted file
-      .parquet(indexDir)
-
-    val dim = model.clusterCenters.headOption.map(_.size).getOrElse(0)
-    val cents = model.clusterCenters.zipWithIndex.map { case (v, i) =>
-      (i, v.toArray.map(_.toFloat))
-    }
+      .parquet(dir)
     // Persist the centroid table (k rows) next to the inverted file — the
     // reference's `cluster_centroids.bin` artifact. `load` then reads k rows
     // instead of re-aggregating dim avg() columns over the whole index.
-    writeCentroids(spark, centroidsDir(indexDir), cents)
-    IvfIndex(spark, indexDir, numClusters, dim, cents)
+    writeCentroids(spark, centroidsDir(dir), cents)
   }
 
   /** Centroid artifact path: a sibling dir, NOT inside the partitioned index
@@ -665,8 +616,9 @@ object IvfIndex {
     * path, swapped via write-temp + atomic rename-with-overwrite
     * (`FileContext.rename(OVERWRITE)` — atomic on HDFS and on the local FS),
     * so a concurrent [[loadLatest]] sees either the old or the new version,
-    * never a torn pointer. The rebuilt data itself is already in place
-    * before publish (maintain writes a SIBLING dir, never in-place). */
+    * never a torn pointer. The version's data itself is already in place
+    * before publish ([[IvfIndex.maintain]] and [[IvfIndex.compact]] write a
+    * SIBLING dir, never in-place). */
   def publishLatest(spark: SparkSession, rootDir: String, versionDir: String): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(rootDir)
@@ -705,16 +657,18 @@ object IvfIndex {
   }
 
   /** Version garbage collection — the lifecycle step that bounds a
-    * versioned serving root's storage: every [[maintain]]-rebuild +
-    * [[publishLatest]] rotation leaves the superseded version dir behind
-    * (deliberately — it is the rollback target), and after N rotations the
-    * root holds N dead full-index copies. Deletes version dirs under
-    * `rootDir` EXCEPT the pointer's current target and the `keep` most
-    * recently modified non-serving versions (keep ≥ 1 preserves a rollback
-    * target; 0 keeps only the serving copy). Refuses to run without a
-    * published pointer — GC on an unpublished root could delete the only
-    * copy. Only first-level directories that are not dot/`_`-prefixed are
-    * candidates (the pointer file and Spark metadata are never touched).
+    * versioned serving root's storage: every [[maintain]]-rebuild or
+    * [[IvfIndex.compact]] + [[publishLatest]] rotation leaves the superseded
+    * version dir behind (deliberately — it is the rollback target, and
+    * handles opened on it keep serving its files until it is deleted), and
+    * after N rotations the root holds N dead full-index copies. Deletes
+    * version dirs under `rootDir` EXCEPT the pointer's current target and
+    * the `keep` most recently modified non-serving versions (keep ≥ 1
+    * preserves a rollback target; 0 keeps only the serving copy). Refuses
+    * to run without a published pointer — GC on an unpublished root could
+    * delete the only copy. Only first-level directories that are not
+    * dot/`_`-prefixed are candidates (the pointer file and Spark metadata
+    * are never touched).
     * Returns the deleted dirs. */
   def gcVersions(spark: SparkSession, rootDir: String, keep: Int = 1): Seq[String] = {
     require(keep >= 0, s"keep: $keep")
@@ -726,8 +680,7 @@ object IvfIndex {
     val fs = root.getFileSystem(conf)
     val servingPath = fs.makeQualified(new org.apache.hadoop.fs.Path(serving))
     // a version UNIT is the index dir + its `-centroids` sibling (the
-    // [[load]]/[[build]] artifact convention at centroidsDirFor) — ranked
-    // and deleted together, never split
+    // layout writeVersion owns) — ranked and deleted together, never split
     val versionDirs = fs.listStatus(root).toSeq
       .filter(s => s.isDirectory &&
         !s.getPath.getName.startsWith(".") && !s.getPath.getName.startsWith("_") &&
@@ -742,9 +695,6 @@ object IvfIndex {
       s.getPath.toString +: (if (alsoCents) Seq(cents.toString) else Nil)
     }
   }
-
-  // Per-(sfDir, k) index cache so the bench/verify harness builds each index once.
-  private val cache = scala.collection.concurrent.TrieMap.empty[String, IvfIndex]
 
   /** Hidden-dir-safe sanitization shared by every artifact path: strip the
     * leading separator (a `_`-prefixed dir is invisible to Spark's file
@@ -768,68 +718,62 @@ object IvfIndex {
       .get("target", "ivf-export", s"${safeName(sfDir)}-k$numClusters-merge")
       .toAbsolutePath.toString
 
+  // Per-(sfDir, k) fixture caches so the bench/verify harness builds each index once.
+  private val cache = scala.collection.concurrent.TrieMap.empty[String, IvfIndex]
   private val mergeCache = scala.collection.concurrent.TrieMap.empty[String, IvfIndex]
+
+  /** Serializes the fixtures' first-call builders: TrieMap
+    * .getOrElseUpdate may evaluate the thunk in MORE than one thread on a
+    * concurrent first call, and [[mergedForSfDir]]'s builder (`mergeSegment`,
+    * append-mode) is not idempotent — a double evaluation double-appends the
+    * segment, duplicating vec_ids (ADVICE r8). */
+  private val mergeBuildLock = new Object
+
+  /** Build-once memo: a lock-free fast path; the build itself runs under
+    * the lock, so it executes at most once per key per JVM. */
+  private def buildOnce(memo: scala.collection.concurrent.TrieMap[String, IvfIndex],
+      key: String)(make: => IvfIndex): IvfIndex =
+    memo.getOrElse(key, mergeBuildLock.synchronized(memo.getOrElseUpdate(key, make)))
+
+  /** [[build]] a fixture index at `dir` and export its assignment and
+    * centroids under `exportDir` for oracle replay. */
+  private def buildExported(spark: SparkSession, embeddings: DataFrame, dir: String,
+      numClusters: Int, exportDir: String): IvfIndex = {
+    val built = build(spark, embeddings, dir, numClusters)
+    built.vectors.select(col("vec_id"), col("cluster"))
+      // corpus-∝ table: keep the write partition-parallel (verdict r14
+      // #5 hygiene — this was the one coalesce(1) on a corpus-sized
+      // frame left; the oracle replays it via a flat /assign/*.parquet
+      // glob, which a multi-file directory satisfies unchanged)
+      .write.mode("overwrite").parquet(s"$exportDir/assign")
+    writeCentroids(spark, s"$exportDir/centroids", built.centroids)
+    built
+  }
 
   /** The daily-ingest scenario as a cached per-(sfDir, k) fixture: a BASE
     * index built over 9/10 of the corpus (`vec_id % 10 != 0` — the complement
     * of `ivf_assign_new`'s arrival stream), then ONE [[IvfIndex.mergeSegment]]
     * of the arriving tenth. The base assignment and centroids are exported
     * for oracle replay; `build()`'s overwrite mode clears any prior JVM's
-    * merged rows, and the cache guarantees the append happens exactly once
-    * per JVM (a double merge would double-count the segment). */
-  /** Serializes [[mergedForSfDir]]'s first-call builder: TrieMap
-    * .getOrElseUpdate may evaluate the thunk in MORE than one thread on a
-    * concurrent first call, and this builder's side effect (`mergeSegment`,
-    * append-mode) is not idempotent — a double evaluation double-appends the
-    * segment, duplicating vec_ids (ADVICE r8). `forSfDir`'s builder is all
-    * overwrite-mode and needs no lock. */
-  private val mergeBuildLock = new Object
-
-  def mergedForSfDir(spark: SparkSession, sfDir: String, numClusters: Int): IvfIndex = {
-    val key = s"$sfDir#$numClusters"
-    val safe = safeName(sfDir)
-    val exportDir = mergeExportPathFor(sfDir, numClusters)
-    // lock-free fast path; the build itself runs under the lock so the
-    // append-mode thunk executes at most once per key per JVM
-    val idx = mergeCache.get(key).getOrElse(mergeBuildLock.synchronized {
-      mergeCache.getOrElseUpdate(key, {
-      val dir = s"target/ivf-index/$safe-k$numClusters-merge"
+    * merged rows, and the build-once memo guarantees the append happens
+    * exactly once per JVM (a double merge would double-count the segment). */
+  def mergedForSfDir(spark: SparkSession, sfDir: String, numClusters: Int): IvfIndex =
+    buildOnce(mergeCache, s"$sfDir#$numClusters") {
       val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      val built = build(spark, emb.where(col("vec_id") % 10 =!= 0), dir, numClusters)
-      built.vectors.select(col("vec_id"), col("cluster"))
-        // corpus-∝ table: keep the write partition-parallel (verdict r14
-        // #5 hygiene — this was the one coalesce(1) on a corpus-sized
-        // frame left; the oracle replays it via a flat /assign/*.parquet
-        // glob, which a multi-file directory satisfies unchanged)
-        .write.mode("overwrite").parquet(s"$exportDir/assign")
-      writeCentroids(spark, s"$exportDir/centroids", built.centroids)
+      val built = buildExported(spark, emb.where(col("vec_id") % 10 =!= 0),
+        s"target/ivf-index/${safeName(sfDir)}-k$numClusters-merge", numClusters,
+        mergeExportPathFor(sfDir, numClusters))
       built.mergeSegment(emb.where(col("vec_id") % 10 === 0))
       built
-      })
-    })
-    idx
-  }
+    }
 
   /** Build-or-reuse an index for a testdata dir. Index lives under ./target. */
-  def forSfDir(spark: SparkSession, sfDir: String, numClusters: Int): IvfIndex = {
-    val key = s"$sfDir#$numClusters"
-    val safe = safeName(sfDir)
-    val exportDir = exportPathFor(sfDir, numClusters)
-    val idx = cache.getOrElseUpdate(key, {
-      val dir = s"target/ivf-index/$safe-k$numClusters"
-      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      val built = build(spark, emb, dir, numClusters)
-      built.vectors.select(col("vec_id"), col("cluster"))
-        // corpus-∝ table: keep the write partition-parallel (verdict r14
-        // #5 hygiene — this was the one coalesce(1) on a corpus-sized
-        // frame left; the oracle replays it via a flat /assign/*.parquet
-        // glob, which a multi-file directory satisfies unchanged)
-        .write.mode("overwrite").parquet(s"$exportDir/assign")
-      writeCentroids(spark, s"$exportDir/centroids", built.centroids)
-      built
-    })
-    idx
-  }
+  def forSfDir(spark: SparkSession, sfDir: String, numClusters: Int): IvfIndex =
+    buildOnce(cache, s"$sfDir#$numClusters") {
+      buildExported(spark, spark.read.parquet(s"$sfDir/embeddings.parquet"),
+        s"target/ivf-index/${safeName(sfDir)}-k$numClusters", numClusters,
+        exportPathFor(sfDir, numClusters))
+    }
 }
 
 /** Batch multi-query k-NN: score a whole table of queries in ONE job — the

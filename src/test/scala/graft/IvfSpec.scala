@@ -250,81 +250,67 @@ class IvfSpec extends SparkSpec {
       "a fresh load must see the merged rows")
   }
 
-  test("compact: fragmented clusters collapse to one file; rows and search invariant") {
+  test("compact: fragmented clusters collapse into a new version; a handle on the old one keeps serving after publish") {
     // three daily merges fragment the layout (each appends ≤1 file per
-    // touched cluster); compact(1) must rewrite ONLY the fragmented
-    // clusters, leave every row and search result identical, and bring all
-    // per-cluster parquet counts back to 1
-    val dir = "target/ivf-test/compact"
-    val base = emb.where(col("vec_id") % 5 === 0)
-    val idx = IvfIndex.build(spark, base, dir, numClusters = 8)
-    (1 to 3).foreach(d => idx.mergeSegment(emb.where(col("vec_id") % 5 === d)))
-    def filesPerCluster(): Map[Int, Int] = {
-      val root = new java.io.File(dir)
-      root.listFiles().filter(f => f.isDirectory && f.getName.startsWith("cluster="))
-        .map(f => f.getName.stripPrefix("cluster=").toInt ->
-          f.listFiles().count(_.getName.endsWith(".parquet"))).toMap
+    // touched cluster); compact(v2) writes every row into a NEW version with
+    // one file per cluster and the same centroids and touches nothing under
+    // v1, so a reader opened before the cutover keeps serving exact results
+    val root = "target/ivf-test/compact"
+    def rm(f: java.io.File): Unit = {
+      if (f.isDirectory) f.listFiles().foreach(rm); f.delete()
     }
-    val before = filesPerCluster()
-    assert(before.values.exists(_ > 1), s"merges must fragment: $before")
-    val rowsBefore = idx.vectors.select("vec_id", "cluster").collect()
-      .map(r => (r.getLong(0), r.getInt(1))).toSet
-    val compacted = idx.compact(maxFilesPerCluster = 1)
-    assert(compacted.toSet == before.filter(_._2 > 1).keySet,
-      s"compact must touch exactly the fragmented clusters: $compacted vs $before")
-    val after = filesPerCluster()
-    assert(after.values.forall(_ <= 1), s"post-compact fragmentation: $after")
+    rm(new java.io.File(root))
+    val (v1, v2) = (s"$root/v1", s"$root/v2")
+    val idx = IvfIndex.build(spark, emb.where(col("vec_id") % 5 === 0), v1, numClusters = 8)
+    (1 to 3).foreach(d => idx.mergeSegment(emb.where(col("vec_id") % 5 === d)))
+    IvfIndex.publishLatest(spark, root, v1)
+    val reader = IvfIndex.loadLatest(spark, root)
+    def filesPerCluster(dir: String): Map[Int, Seq[String]] =
+      new java.io.File(dir).listFiles()
+        .filter(f => f.isDirectory && f.getName.startsWith("cluster="))
+        .map(f => f.getName.stripPrefix("cluster=").toInt ->
+          f.listFiles().map(_.getName).filter(_.endsWith(".parquet")).sorted.toSeq)
+        .toMap
+    def rows(i: IvfIndex): Set[(Long, Int)] =
+      i.vectors.select("vec_id", "cluster").collect()
+        .map(r => (r.getLong(0), r.getInt(1))).toSet
+    def cents(i: IvfIndex): Map[Int, Seq[Float]] =
+      i.centroids.map { case (c, v) => c -> v.toSeq }.toMap
+    val before = filesPerCluster(v1)
+    val fragmented = before.count(_._2.length > 1)
+    assert(fragmented > 0, s"merges must fragment: $before")
+    println(s"[compact] fragmented clusters before compaction: $fragmented of " +
+      s"${before.size} (${math.round(100.0 * fragmented / before.size)} %)")
+    val rowsBefore = rows(idx)
+
+    val compacted = idx.compact(v2)
+    assert(compacted.indexDir == v2)
+    val after = filesPerCluster(v2)
+    assert(after.values.forall(_.length <= 1), s"post-compact fragmentation: $after")
     assert(after.keySet == before.keySet, "no cluster directory may vanish")
-    val rowsAfter = idx.vectors.select("vec_id", "cluster").collect()
-      .map(r => (r.getLong(0), r.getInt(1))).toSet
-    assert(rowsAfter == rowsBefore, "compaction must not move or lose a row")
+    val onDisk = IvfIndex.load(spark, v2)
+    assert(rows(onDisk) == rowsBefore && rows(compacted) == rowsBefore,
+      "compaction must not move or lose a row")
+    assert(cents(onDisk) == cents(idx), "compaction must keep the centroids")
+    assert(filesPerCluster(v1) == before, "compaction must not touch the old version")
     // search invariance at full probe over the merged corpus
     val corpus = emb.where(col("vec_id") % 5 <= 3)
     val exact = KnnExact.topK(corpus, qv, 10).collect()
       .map(r => (r.getLong(0), r.getAs[Double]("sim")))
-    val got = idx.search(qv, 10, 8).collect()
+    def fullProbe(i: IvfIndex) = i.search(qv, 10, 8).collect()
       .map(r => (r.getLong(0), r.getAs[Double]("sim")))
-    assert(got.sameElements(exact), "post-compact full-probe search diverged")
-    // idempotence: a second compact is a no-op
-    assert(idx.compact(maxFilesPerCluster = 1).isEmpty)
-  }
+    assert(fullProbe(onDisk).sameElements(exact), "post-compact full-probe search diverged")
 
-  test("compact: orphaned aside dir from a crashed swap is restored first") {
-    // ADVICE r12: a process dying between rename(dst, aside) and
-    // rename(src, dst) leaves the cluster's ONLY copy in the dot-prefixed
-    // aside dir, which Spark's file index ignores — searches silently drop
-    // the cluster and the next compact's pre-emptive aside delete could
-    // destroy the copy. The start-of-compact recovery scan must restore it.
-    val dir = "target/ivf-test/compact-orphan"
-    val base = emb.where(col("vec_id") % 5 === 0)
-    val idx = IvfIndex.build(spark, base, dir, numClusters = 8)
-    idx.mergeSegment(emb.where(col("vec_id") % 5 === 1))
-    val rowsBefore = idx.vectors.select("vec_id", "cluster").collect()
-      .map(r => (r.getLong(0), r.getInt(1))).toSet
-    // simulate the crash window on one populated cluster: dst moved aside,
-    // replacement never moved in
-    val root = new java.io.File(dir)
-    val victim = root.listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("cluster=")).head
-    val c = victim.getName.stripPrefix("cluster=")
-    val aside = new java.io.File(root, s".cluster=$c.compacted-away")
-    assert(victim.renameTo(aside), "test setup: move-aside failed")
-    // the damage is real: the cluster's rows are invisible to a fresh scan
-    assert(spark.read.parquet(dir).count() < rowsBefore.size)
-    idx.compact(maxFilesPerCluster = 1)
-    assert(!aside.exists(), "recovery must consume the aside dir")
-    val rowsAfter = idx.vectors.select("vec_id", "cluster").collect()
-      .map(r => (r.getLong(0), r.getInt(1))).toSet
-    assert(rowsAfter == rowsBefore,
-      "orphan recovery must restore the cluster's rows exactly")
-    // a REDUNDANT aside (crash after successful move-in, before cleanup)
-    // is deleted, not restored over the live dir
-    val live = new java.io.File(root, victim.getName)
-    val stale = new java.io.File(root, s".cluster=$c.compacted-away")
-    assert(stale.mkdir(), "test setup: stale aside")
-    idx.compact(maxFilesPerCluster = 1)
-    assert(!stale.exists() && live.exists(),
-      "redundant aside must be cleaned up without touching the live cluster")
+    // the cutover: new readers follow the pointer, the old handle keeps
+    // serving its own files, exactly
+    IvfIndex.publishLatest(spark, root, v2)
+    assert(IvfIndex.loadLatest(spark, root).indexDir == v2)
+    assert(fullProbe(reader).sameElements(exact),
+      "a handle opened before the compaction must still serve exact results")
+    // idempotence: compacting the compacted version returns the same handle
+    // and writes nothing
+    assert(compacted.compact(s"$root/v3") eq compacted)
+    assert(!new java.io.File(s"$root/v3").exists())
   }
 
   test("gcVersions: bounds the versioned root without touching the serving copy") {
