@@ -250,33 +250,46 @@ class IvfSpec extends SparkSpec {
       "a fresh load must see the merged rows")
   }
 
-  test("compact: fragmented clusters collapse into a new version; a handle on the old one keeps serving after publish") {
-    // three daily merges fragment the layout (each appends ≤1 file per
-    // touched cluster); compact(v2) writes every row into a NEW version with
-    // one file per cluster and the same centroids and touches nothing under
-    // v1, so a reader opened before the cutover keeps serving exact results
-    val root = "target/ivf-test/compact"
+  // three daily merges fragment the layout (each appends ≤1 file per touched
+  // cluster); returns the fragmented handle on `<root>/v1`, which is published
+  private def fragmentedIndex(root: String): IvfIndex = {
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rm); f.delete()
     }
     rm(new java.io.File(root))
-    val (v1, v2) = (s"$root/v1", s"$root/v2")
-    val idx = IvfIndex.build(spark, emb.where(col("vec_id") % 5 === 0), v1, numClusters = 8)
+    val idx = IvfIndex.build(spark, emb.where(col("vec_id") % 5 === 0), s"$root/v1",
+      numClusters = 8)
     (1 to 3).foreach(d => idx.mergeSegment(emb.where(col("vec_id") % 5 === d)))
-    IvfIndex.publishLatest(spark, root, v1)
-    val reader = IvfIndex.loadLatest(spark, root)
-    def filesPerCluster(dir: String): Map[Int, Seq[String]] =
-      new java.io.File(dir).listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("cluster="))
-        .map(f => f.getName.stripPrefix("cluster=").toInt ->
-          f.listFiles().map(_.getName).filter(_.endsWith(".parquet")).sorted.toSeq)
-        .toMap
+    IvfIndex.publishLatest(spark, root, s"$root/v1")
+    idx
+  }
+
+  private def compactFilesPerCluster(dir: String): Map[Int, Seq[String]] =
+    new java.io.File(dir).listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("cluster="))
+      .map(f => f.getName.stripPrefix("cluster=").toInt ->
+        f.listFiles().map(_.getName).filter(_.endsWith(".parquet")).sorted.toSeq)
+      .toMap
+
+  // exact top-10 over the merged corpus, and an index's full-probe answer
+  private def mergedExact: Array[(Long, Double)] =
+    KnnExact.topK(emb.where(col("vec_id") % 5 <= 3), qv, 10).collect()
+      .map(r => (r.getLong(0), r.getAs[Double]("sim")))
+  private def fullProbe(i: IvfIndex): Array[(Long, Double)] =
+    i.search(qv, 10, 8).collect().map(r => (r.getLong(0), r.getAs[Double]("sim")))
+
+  test("compact: fragmented clusters collapse to one file; rows and search invariant") {
+    // compact(v2) writes every row into a NEW version with one file per
+    // cluster and the same centroids, and touches nothing under v1
+    val root = "target/ivf-test/compact"
+    val (v1, v2) = (s"$root/v1", s"$root/v2")
+    val idx = fragmentedIndex(root)
     def rows(i: IvfIndex): Set[(Long, Int)] =
       i.vectors.select("vec_id", "cluster").collect()
         .map(r => (r.getLong(0), r.getInt(1))).toSet
     def cents(i: IvfIndex): Map[Int, Seq[Float]] =
       i.centroids.map { case (c, v) => c -> v.toSeq }.toMap
-    val before = filesPerCluster(v1)
+    val before = compactFilesPerCluster(v1)
     val fragmented = before.count(_._2.length > 1)
     assert(fragmented > 0, s"merges must fragment: $before")
     println(s"[compact] fragmented clusters before compaction: $fragmented of " +
@@ -285,32 +298,39 @@ class IvfSpec extends SparkSpec {
 
     val compacted = idx.compact(v2)
     assert(compacted.indexDir == v2)
-    val after = filesPerCluster(v2)
+    val after = compactFilesPerCluster(v2)
     assert(after.values.forall(_.length <= 1), s"post-compact fragmentation: $after")
     assert(after.keySet == before.keySet, "no cluster directory may vanish")
     val onDisk = IvfIndex.load(spark, v2)
     assert(rows(onDisk) == rowsBefore && rows(compacted) == rowsBefore,
       "compaction must not move or lose a row")
     assert(cents(onDisk) == cents(idx), "compaction must keep the centroids")
-    assert(filesPerCluster(v1) == before, "compaction must not touch the old version")
+    assert(compactFilesPerCluster(v1) == before, "compaction must not touch the old version")
     // search invariance at full probe over the merged corpus
-    val corpus = emb.where(col("vec_id") % 5 <= 3)
-    val exact = KnnExact.topK(corpus, qv, 10).collect()
-      .map(r => (r.getLong(0), r.getAs[Double]("sim")))
-    def fullProbe(i: IvfIndex) = i.search(qv, 10, 8).collect()
-      .map(r => (r.getLong(0), r.getAs[Double]("sim")))
-    assert(fullProbe(onDisk).sameElements(exact), "post-compact full-probe search diverged")
-
-    // the cutover: new readers follow the pointer, the old handle keeps
-    // serving its own files, exactly
-    IvfIndex.publishLatest(spark, root, v2)
-    assert(IvfIndex.loadLatest(spark, root).indexDir == v2)
-    assert(fullProbe(reader).sameElements(exact),
-      "a handle opened before the compaction must still serve exact results")
+    assert(fullProbe(onDisk).sameElements(mergedExact),
+      "post-compact full-probe search diverged")
     // idempotence: compacting the compacted version returns the same handle
     // and writes nothing
     assert(compacted.compact(s"$root/v3") eq compacted)
     assert(!new java.io.File(s"$root/v3").exists())
+  }
+
+  test("compact: a handle on the old version keeps serving after the new one is published") {
+    // the cutover: new readers follow the pointer, a reader opened before
+    // the compaction keeps serving its own files, exactly
+    val root = "target/ivf-test/compact-cutover"
+    val v2 = s"$root/v2"
+    val idx = fragmentedIndex(root)
+    val reader = IvfIndex.loadLatest(spark, root)
+    val exact = mergedExact
+    assert(fullProbe(reader).sameElements(exact), "pre-compaction reader diverged")
+    idx.compact(v2)
+    IvfIndex.publishLatest(spark, root, v2)
+    val latest = IvfIndex.loadLatest(spark, root)
+    assert(latest.indexDir == v2)
+    assert(fullProbe(latest).sameElements(exact), "a fresh reader on the new version diverged")
+    assert(fullProbe(reader).sameElements(exact),
+      "a handle opened before the compaction must still serve exact results")
   }
 
   test("gcVersions: bounds the versioned root without touching the serving copy") {
