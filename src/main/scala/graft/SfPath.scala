@@ -12,7 +12,7 @@ object SfPath {
     * evidence (ADVICE r11: two distinct raw sfDirs that sanitize to one safe
     * name would silently share every keyed artifact directory, so the second
     * build overwrites the first caller's artifacts while both memo entries
-    * stay live). */
+    * stay live). Not on `Artifact.memo`: the guard must outlive a reset. */
   private val seen = scala.collection.concurrent.TrieMap.empty[String, String]
 
   /** On-disk twin of [[seen]] (ADVICE r12: the in-JVM map cannot see a

@@ -1,7 +1,5 @@
 package graft
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -72,18 +70,16 @@ object SparkEntry {
     * fixed serving nlist=16; block size had grown 1,250 → 12,500). */
   val DedupBlockSize = 128
 
-  private[graft] val dedupBlockK = TrieMap[String, Int]()
-
   /** Blocking granularity for `near_dup_ivf`: constant target block size,
     * floored at [[NumClusters]] — at the gate scales (≤2,000 vectors) this
     * IS the serving index (same forSfDir cache key, same export), so the
     * finer dedup clustering only materializes where it pays. Memoized per
     * sfDir (one metadata-only count). */
   def dedupBlockClusters(s: SparkSession, sfDir: String): Int =
-    dedupBlockK.getOrElseUpdate(sfDir, {
+    graft.sources.Artifact.memo(s"dedup-blocks#$sfDir") {
       val n = s.read.parquet(s"$sfDir/embeddings.parquet").count()
       math.max(NumClusters, math.ceil(n.toDouble / DedupBlockSize).toInt)
-    })
+    }
   /** Fixed input sample for `contrast_near_dup_fixed_block` — the sf0.1
     * corpus size, so every gate scale is untouched and scaled suites pay a
     * CONSTANT pedagogy bill instead of a quadratic one (vec_ids are

@@ -45,6 +45,8 @@ object Bucketing {
       .saveAsTable(table)
   }
 
+  // not `Artifact.memo`: `dropSupersededLayouts` also reads this map as its
+  // live-table set
   private val cache = scala.collection.concurrent.TrieMap[String, (String, String)]()
 
   /** Build (once per JVM per sf dir) the bucketed orders/lineitem pair —

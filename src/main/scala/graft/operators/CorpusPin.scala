@@ -35,6 +35,8 @@ private[graft] object CorpusPin {
     graft.multimodal.Multimodal.BatchXorKey,
     graft.multimodal.Multimodal.DebugAssertDisjointProp, "batch")
 
+  // not `Artifact.memo`: a verdict is keyed by corpus signature, so it stays
+  // valid across an `Artifact.reset()` rebuild
   private val verified = TrieMap.empty[(String, Long, Long, Int), Unit]
 
   /** Drop all memoized verdicts (test hook — the artifact-rebuild drills

@@ -706,12 +706,9 @@ object Dedup {
     * any eps, is the one property the 100 TB design needs: df ≫ noise
     * boilerplate can never order as rare, so hot shingles never enter a
     * prefix. */
-  private val cmsMemo =
-    scala.collection.concurrent.TrieMap.empty[Int, Array[Byte]]
-
-  private[operators] def cmsBytesFor(postings: DataFrame): Array[Byte] = {
-    val key = postings.queryExecution.analyzed.semanticHash()
-    cmsMemo.getOrElseUpdate(key, {
+  private[operators] def cmsBytesFor(postings: DataFrame): Array[Byte] =
+    graft.sources.Artifact.memo(
+        s"cms#${postings.queryExecution.analyzed.semanticHash()}") {
       val row = postings
         .agg(count_min_sketch(col("s"), lit(1e-4d), lit(0.99d), lit(42))
           .as("cms")).head()
@@ -722,12 +719,7 @@ object Dedup {
         val bos = new java.io.ByteArrayOutputStream()
         empty.writeTo(bos); bos.toByteArray
       } else row.getAs[Array[Byte]](0)
-    })
-  }
-
-  /** For tests: drop memoized sketches (they are tiny and deterministic —
-    * this only exists so suites can assert rebuild behavior). */
-  private[operators] def clearCmsMemo(): Unit = cmsMemo.clear()
+    }
 
   /** Shared tail of the set-similarity join, prefix-filtered (the SSJoin /
     * PPJoin candidate rules — Chaudhuri et al. ICDE'06, Bayardo et al.

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions.cosineSim
+import graft.sources.Artifact
 
 /** IVF (Inverted-File) approximate-nearest-neighbor index, Spark-native.
   *
@@ -389,29 +390,9 @@ final case class IvfIndex(
       newVectors: DataFrame,
       maxLoadFactor: Double = 2.0,
       rebuildDir: Option[String] = None,
-      seed: Long = 42L,
-      baseClusterCounts: Option[DataFrame] = None): (IvfIndex, Boolean) = {
+      seed: Long = 42L): (IvfIndex, Boolean) = {
     mergeSegment(newVectors)
-    // Rebuild gate. With `baseClusterCounts` — the (cluster, n_vectors) rows
-    // an `ivf_balance` run already produced for the PRE-merge index — the
-    // post-merge load factor composes from base counts + the segment's argmax
-    // histogram (the `ivf_merge_counts` contract: merge never moves existing
-    // rows), so the no-rebuild fast path costs O(segment) + k rows and never
-    // re-scans the index (verdict r8 #8). Without it, fall back to the
-    // post-merge [[balanceReport]] scan.
-    val maxLf = baseClusterCounts match {
-      case Some(base) =>
-        val seg = assignNew(newVectors)
-          .groupBy(col("cluster")).agg(count(lit(1)).as("seg_n"))
-        base.select(col("cluster"), col("n_vectors"))
-          .join(seg, Seq("cluster"), "full_outer")
-          .select((coalesce(col("n_vectors"), lit(0L)) +
-            coalesce(col("seg_n"), lit(0L))).as("n"))
-          .agg((max(col("n")) * numClusters).cast("double") / sum(col("n")))
-          .head().getDouble(0)
-      case None =>
-        balanceReport.agg(max(col("load_factor"))).head().getDouble(0)
-    }
+    val maxLf = balanceReport.agg(max(col("load_factor"))).head().getDouble(0)
     if (maxLf > maxLoadFactor) {
       val dir = rebuildDir.getOrElse(indexDir.stripSuffix("/") + "-rebuilt")
       (IvfIndex.build(spark,
@@ -548,41 +529,19 @@ object IvfIndex {
   }
 
   /** Reload a persisted index. Centroids come from the k-row
-    * `<indexDir>-centroids` parquet written at build time (the reference's
-    * `cluster_centroids.bin`); for an index dir without that artifact they are
-    * reconstructed as per-cluster means — the K-means fixed point — computed
-    * distributed, collected as k rows only. */
+    * `<indexDir>-centroids` parquet that every version write leaves next to
+    * the index (the reference's `cluster_centroids.bin`); a dir without it
+    * is not an index version and fails to load. */
   def load(spark: SparkSession, indexDir: String): IvfIndex = {
     val df = spark.read.parquet(indexDir)
     val dim = df.select(size(col("embedding"))).head().getInt(0)
-    val cdir = centroidsDir(indexDir)
-    // resolve through Hadoop FileSystem, not java.io.File: the index can live
-    // on HDFS/S3 in production, where a local-file exists() would silently
-    // miss the artifact and fall into the recompute path (per-cluster means ≠
-    // stored model.clusterCenters when k-means stopped on maxIter)
-    val cpath = new org.apache.hadoop.fs.Path(cdir)
-    val cfs = cpath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cents =
-      if (cfs.exists(cpath)) {
-        spark.read.parquet(cdir).collect().map { r =>
-          (r.getAs[Int]("cluster"), r.getAs[Seq[Float]]("centroid").toArray)
-        }
-      } else {
-        df.groupBy("cluster")
-          .agg(array((0 until dim).map(i =>
-            avg(element_at(col("embedding"), i + 1))): _*).as("centroid"))
-          .collect()
-          .map { r =>
-            (r.getAs[Int]("cluster"),
-              r.getAs[Seq[Double]]("centroid").map(_.toFloat).toArray)
-          }
-      }
+    val cents = spark.read.parquet(centroidsDir(indexDir)).collect().map { r =>
+      (r.getAs[Int]("cluster"), r.getAs[Seq[Float]]("centroid").toArray)
+    }
     IvfIndex(spark, indexDir, cents.length, dim, cents).pin(df)
   }
 
   // ------------------------------------------------- tuned serving point
-
-  private[graft] val tunedCache = scala.collection.concurrent.TrieMap.empty[String, Int]
 
   /** The recall-tuned nProbe for a (sfDir, k, floor) serving config —
     * [[IvfIndex.tuneNProbe]] made load-bearing (verdict r8 #4): one analytic
@@ -596,14 +555,13 @@ object IvfIndex {
     * batch scan per JVM, not one per query execution. */
   def tunedProbeForSfDir(spark: SparkSession, sfDir: String, numClusters: Int,
       k: Int, recallFloor: Double): Int =
-    tunedCache.getOrElseUpdate(s"$sfDir#$numClusters#$k#$recallFloor", {
+    Artifact.memo(s"ivf-tuned#$sfDir#$numClusters#$k#$recallFloor") {
       val idx = forSfDir(spark, sfDir, numClusters)
       val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      val queries = emb.where(org.apache.spark.sql.functions.col("vec_id") < 8)
-        .select(org.apache.spark.sql.functions.col("vec_id").as("query_id"),
-          org.apache.spark.sql.functions.col("embedding"))
+      val queries = emb.where(col("vec_id") < 8)
+        .select(col("vec_id").as("query_id"), col("embedding"))
       idx.tuneNProbe(emb, queries, k, recallFloor)
-    })
+    }
 
   /** Name of the atomic version pointer inside an index ROOT dir. */
   val LatestPointer = "LATEST"
@@ -696,44 +654,28 @@ object IvfIndex {
     }
   }
 
-  /** Hidden-dir-safe sanitization shared by every artifact path: strip the
-    * leading separator (a `_`-prefixed dir is invisible to Spark's file
-    * index — "All paths were ignored"), then flatten the rest. ONE
-    * definition repo-wide ([[graft.SfPath]]) so build path and keyed oracle
-    * render cannot drift. */
-  private def safeName(sfDir: String): String = graft.SfPath.safe(sfDir)
-
   /** Deterministic export path for (sfDir, numClusters) — a PURE function of
     * the config, usable by an oracle render whether or not the build has run
     * in this JVM yet (verdict r10 #2: the keyed replacement for the legacy
     * ran-first singleton, deleted in r12). [[forSfDir]] writes here. */
   def exportPathFor(sfDir: String, numClusters: Int): String =
     java.nio.file.Paths
-      .get("target", "ivf-export", s"${safeName(sfDir)}-k$numClusters")
+      .get("target", "ivf-export", s"${graft.SfPath.safe(sfDir)}-k$numClusters")
       .toAbsolutePath.toString
 
   /** [[exportPathFor]] for the merged-segment fixture ([[mergedForSfDir]]). */
   def mergeExportPathFor(sfDir: String, numClusters: Int): String =
     java.nio.file.Paths
-      .get("target", "ivf-export", s"${safeName(sfDir)}-k$numClusters-merge")
+      .get("target", "ivf-export", s"${graft.SfPath.safe(sfDir)}-k$numClusters-merge")
       .toAbsolutePath.toString
 
-  // Per-(sfDir, k) fixture caches so the bench/verify harness builds each index once.
-  private val cache = scala.collection.concurrent.TrieMap.empty[String, IvfIndex]
-  private val mergeCache = scala.collection.concurrent.TrieMap.empty[String, IvfIndex]
-
-  /** Serializes the fixtures' first-call builders: TrieMap
-    * .getOrElseUpdate may evaluate the thunk in MORE than one thread on a
-    * concurrent first call, and [[mergedForSfDir]]'s builder (`mergeSegment`,
-    * append-mode) is not idempotent — a double evaluation double-appends the
-    * segment, duplicating vec_ids (ADVICE r8). */
-  private val mergeBuildLock = new Object
-
-  /** Build-once memo: a lock-free fast path; the build itself runs under
-    * the lock, so it executes at most once per key per JVM. */
-  private def buildOnce(memo: scala.collection.concurrent.TrieMap[String, IvfIndex],
-      key: String)(make: => IvfIndex): IvfIndex =
-    memo.getOrElse(key, mergeBuildLock.synchronized(memo.getOrElseUpdate(key, make)))
+  // ------------------------------------------------------------- fixtures
+  // The harness fixtures (`forSfDir`, `mergedForSfDir` and the tuned nProbe
+  // above) are built once per JVM per config through `Artifact.memo`, whose
+  // per-key lock keeps a concurrent first call from running a build (or
+  // `mergedForSfDir`'s append) twice. `Artifact.reset()` forgets them: the
+  // next call rebuilds over the same dirs, so a handle taken before a reset
+  // is stale after it.
 
   /** [[build]] a fixture index at `dir` and export its assignment and
     * centroids under `exportDir` for oracle replay. */
@@ -754,14 +696,14 @@ object IvfIndex {
     * index built over 9/10 of the corpus (`vec_id % 10 != 0` — the complement
     * of `ivf_assign_new`'s arrival stream), then ONE [[IvfIndex.mergeSegment]]
     * of the arriving tenth. The base assignment and centroids are exported
-    * for oracle replay; `build()`'s overwrite mode clears any prior JVM's
+    * for oracle replay; `build()`'s overwrite mode clears any prior build's
     * merged rows, and the build-once memo guarantees the append happens
-    * exactly once per JVM (a double merge would double-count the segment). */
+    * exactly once per build (a double merge would double-count the segment). */
   def mergedForSfDir(spark: SparkSession, sfDir: String, numClusters: Int): IvfIndex =
-    buildOnce(mergeCache, s"$sfDir#$numClusters") {
+    Artifact.memo(s"ivf-merged#$sfDir#$numClusters") {
       val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
       val built = buildExported(spark, emb.where(col("vec_id") % 10 =!= 0),
-        s"target/ivf-index/${safeName(sfDir)}-k$numClusters-merge", numClusters,
+        s"target/ivf-index/${graft.SfPath.safe(sfDir)}-k$numClusters-merge", numClusters,
         mergeExportPathFor(sfDir, numClusters))
       built.mergeSegment(emb.where(col("vec_id") % 10 === 0))
       built
@@ -769,9 +711,9 @@ object IvfIndex {
 
   /** Build-or-reuse an index for a testdata dir. Index lives under ./target. */
   def forSfDir(spark: SparkSession, sfDir: String, numClusters: Int): IvfIndex =
-    buildOnce(cache, s"$sfDir#$numClusters") {
+    Artifact.memo(s"ivf-index#$sfDir#$numClusters") {
       buildExported(spark, spark.read.parquet(s"$sfDir/embeddings.parquet"),
-        s"target/ivf-index/${safeName(sfDir)}-k$numClusters", numClusters,
+        s"target/ivf-index/${graft.SfPath.safe(sfDir)}-k$numClusters", numClusters,
         exportPathFor(sfDir, numClusters))
     }
 }

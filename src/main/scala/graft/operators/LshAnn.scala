@@ -130,7 +130,8 @@ object LshAnn {
     * at local scale, and far worse on object storage); with it the listing
     * amortizes across the process lifetime while per-query partition
     * PRUNING still applies to the cached relation. [[buildIndex]]
-    * invalidates the handle. */
+    * invalidates the handle. A serve-time handle, not a build, so it is not
+    * on `Artifact.memo`. */
   private val frameCache =
     scala.collection.concurrent.TrieMap.empty[String, DataFrame]
 
@@ -149,8 +150,6 @@ object LshAnn {
         df
     }
 
-  private val indexCache = scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** Build-or-reuse the bucket-partitioned index for a testdata dir (lives
     * under ./target like [[IvfIndex.forSfDir]]) and return its absolute
     * path. Pure data layout — no trained model, so there is no oracle
@@ -158,13 +157,13 @@ object LshAnn {
     * ([[searchOracleSql]]) replays the identical bucket math. */
   def forSfDir(spark: org.apache.spark.sql.SparkSession, sfDir: String,
       dim: Int): String =
-    indexCache.getOrElseUpdate(s"$sfDir#$dim", {
+    graft.sources.Artifact.memo(s"lsh-index#$sfDir#$dim") {
       val safe = graft.SfPath.safe(sfDir)
       val dir = java.nio.file.Paths.get("target", "lsh-index", s"$safe-b$NumBits")
         .toAbsolutePath.toString
       buildIndex(spark.read.parquet(s"$sfDir/embeddings.parquet"), dim, dir)
       dir
-    })
+    }
 
   /** Multiprobe search over a [[buildIndex]] layout: `bucket IN (probes)`
     * becomes `PartitionFilters` on the scan — the LSH twin of the IVF

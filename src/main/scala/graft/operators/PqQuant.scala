@@ -148,16 +148,13 @@ object PqQuant {
   def exportPathFor(sfDir: String): String = java.nio.file.Paths
     .get("target", "pq-export", graft.SfPath.safe(sfDir)).toAbsolutePath.toString
 
-  private val cache =
-    scala.collection.concurrent.TrieMap.empty[String, (Model, DataFrame)]
-
   /** Train-or-reuse the quantizer + encoded table for a testdata dir; export
     * codebook and codes parquet for the oracle replay. The encoded table is
     * read back from its own export — the production shape (codes are a
     * persisted index artifact, not recomputed per query). */
-  def forSfDir(spark: SparkSession, sfDir: String, dim: Int): (Model, DataFrame) = {
-    val exportDir = exportPathFor(sfDir)
-    val result = cache.getOrElseUpdate(sfDir, {
+  def forSfDir(spark: SparkSession, sfDir: String, dim: Int): (Model, DataFrame) =
+    graft.sources.Artifact.memo(s"pq#$sfDir") {
+      val exportDir = exportPathFor(sfDir)
       val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
       val model = train(emb, dim)
       codebookDf(spark, model)
@@ -165,11 +162,7 @@ object PqQuant {
       encode(spark, emb, model)
         .write.mode("overwrite").parquet(s"$exportDir/codes")
       (model, spark.read.parquet(s"$exportDir/codes"))
-    })
-    result
-  }
-
-  private val ivfCache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+    }
 
   /** IVF×PQ composition — BOTH scale levers in one artifact: the PQ codes
     * written INSIDE the cluster-partitioned inverted file, so a probe-pruned
@@ -188,14 +181,14 @@ object PqQuant {
     // files a live cached DataFrame lazily re-lists
     val dir = java.nio.file.Paths.get("target", "pq-export",
       s"${graft.SfPath.safe(sfDir)}-ivfcodes-k$numClusters").toAbsolutePath.toString
-    val codes = ivfCache.getOrElseUpdate(s"$sfDir#$numClusters", {
+    val codes = graft.sources.Artifact.memo(s"pq-ivf#$sfDir#$numClusters") {
       val idx = IvfIndex.forSfDir(spark, sfDir, numClusters)
       encode(spark, idx.vectors, model)
         .join(idx.vectors.select(col("vec_id"), col("cluster")), Seq("vec_id"))
         .repartition(numClusters, col("cluster"))
         .write.mode("overwrite").partitionBy("cluster").parquet(dir)
       spark.read.parquet(dir)
-    })
+    }
     (model, codes)
   }
 

@@ -42,9 +42,6 @@ object SqQuant {
     (mns, mxs)
   }
 
-  private val statsCache = scala.collection.concurrent
-    .TrieMap.empty[(String, Int), (Array[Double], Array[Double])]
-
   /** The codebook as a PERSISTED INDEX ARTIFACT, computed once per corpus dir
     * — the same treatment [[PqQuant.forSfDir]] gives its codebook and the
     * reference gives `cluster_centroids.bin` (IVF.cpp:489-510). Round-4
@@ -56,7 +53,7 @@ object SqQuant {
     * search embeds the stats as literals. */
   def statsForSfDir(spark: SparkSession, sfDir: String,
       dim: Int): (Array[Double], Array[Double]) =
-    statsCache.getOrElseUpdate((sfDir, dim), {
+    graft.sources.Artifact.memo(s"sq8-stats#$sfDir#$dim") {
       val st = stats(spark.read.parquet(s"$sfDir/embeddings.parquet"), dim)
       val safe = graft.SfPath.safe(sfDir)
       val dir = java.nio.file.Paths.get("target", "sq8-export", s"$safe-d$dim")
@@ -65,7 +62,7 @@ object SqQuant {
       st._1.indices.map(i => (i, st._1(i), st._2(i))).toDF("i", "mn", "mx")
         .coalesce(1).write.mode("overwrite").parquet(dir)
       st
-    })
+    }
 
   /** int8 code column (ARRAY<INT> of 0..255) for an embedding column. */
   def quantizeCol(emb: Column, mns: Array[Double], mxs: Array[Double]): Column =

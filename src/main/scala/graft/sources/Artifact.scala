@@ -25,6 +25,14 @@ import graft.operators.CorpusPin
   *    any artifact rebuilds from source (production analog: a corpus-version
   *    roll).
   *
+  * The same build-once memo ([[Artifact.memo]]) and the same reset also own
+  * the vector-path fixtures: the IVF index and its merged-segment twin, the
+  * tuned nProbe, the SQ8 stats, the PQ codes (flat and IVF-partitioned), the
+  * LSH bucket index, the dedup block count and the Count-Min sketches. A
+  * handle or frame taken from any of them (or from a lake) before
+  * [[Artifact.reset]] is stale afterwards: the next call rebuilds over the
+  * same directory, so re-take it after a reset.
+  *
   * In-JVM staleness is a declared assumption: the memo keys on
   * (artifact, sfDir) only, so a `documents.parquet` regenerated within one
   * JVM keeps serving the old build until [[Artifact.reset]]. */
@@ -66,21 +74,30 @@ private[graft] final case class Artifact(lake: String, name: String)(
 
 private[graft] object Artifact {
 
-  /** Every artifact built in this JVM: memo key → dir (or catalog table). */
-  private val built = TrieMap[String, String]()
+  /** Every build in this JVM: memo key → its result (a lake's dir or
+    * catalog table, a fixture's handle or value). */
+  private val built = TrieMap[String, Any]()
 
-  /** `TrieMap.getOrElseUpdate` evaluates its builder outside any lock, so
-    * two concurrent first readers could both run the overwrite write into one
-    * directory and interleave to a corrupt table. Double-checked per-key
-    * locking makes the build at-most-once: the lock is the interned key
-    * (a handful of (artifact, sfDir) strings, so interning is bounded). */
-  private def memo(key: String)(build: => String): String =
-    built.get(key) match {
-      case Some(d) => d
+  /** The one build-once memo of `graft`: `build`'s result for `key`, run at
+    * most once per JVM until [[reset]]. `TrieMap.getOrElseUpdate` evaluates
+    * its builder outside any lock, so two concurrent first readers could both
+    * run an overwrite write into one directory (or an append twice) and
+    * interleave to a corrupt table. Double-checked per-key locking makes the
+    * build at-most-once: the lock is the interned key (a handful of
+    * per-(artifact, config) strings, so interning is bounded). A key starts
+    * with its owner's name (`ivf-index#…`, `pq#…`) so no two owners collide.
+    * The four memos that stay outside it say why where they are declared. */
+  private[graft] def memo[T](key: String)(build: => T): T =
+    (built.get(key) match {
+      case Some(v) => v
       case None => key.intern.synchronized(built.getOrElseUpdate(key, build))
-    }
+    }).asInstanceOf[T]
 
-  /** Forget every build: the next read of any artifact rebuilds it. */
+  /** The keys built so far — for tests that assert a path built nothing. */
+  private[graft] def memoKeys: collection.Set[String] = built.keySet
+
+  /** Forget every build: the next read of any artifact or fixture rebuilds
+    * it. */
   def reset(): Unit = built.clear()
 
   /** The common artifact: `make`'s frame, written by `write` (an overwrite

@@ -472,9 +472,12 @@ class ArtifactLakeSpec extends SparkSpec {
   }
 
   test("Artifact.reset: the next read of every lake rebuilds it") {
-    // one reset for every lake, IncrementalHistory included: each rebuild is
-    // a new write job, so none of the re-read files may be a pre-reset one
+    // one reset for every lake and vector fixture, IncrementalHistory
+    // included: each rebuild is a new write job, so none of the re-read
+    // files may be a pre-reset one
+    import graft.operators.{IvfIndex, LshAnn, PqQuant, SqQuant}
     val k = graft.operators.TextAnalysis.OovVocabK
+    val (nc, dim) = (SparkEntry.NumClusters, SparkEntry.EmbDim)
     val lakes: Seq[(String, () => DataFrame)] = Seq(
       "VerifiedPairs" -> (() => VerifiedPairs.forSfDir(spark, sf0001, 0.5)),
       "FrameSketchLake" -> (() => FrameSketchLake.sketches(spark, sf0001)),
@@ -488,15 +491,24 @@ class ArtifactLakeSpec extends SparkSpec {
       "IncrementalHistory" ->
         (() => graft.sources.IncrementalHistory.seenHashes(spark, sf0001)),
       "ScrubbedLake" -> (() => graft.sources.ScrubbedLake.documents(spark, sf0001)),
-      "SortedLake" -> (() => graft.sources.SortedLake.events(spark, sf0001)))
+      "SortedLake" -> (() => graft.sources.SortedLake.events(spark, sf0001)),
+      "IvfIndex.forSfDir" -> (() => IvfIndex.forSfDir(spark, sf0001, nc).vectors),
+      "IvfIndex.mergedForSfDir" ->
+        (() => IvfIndex.mergedForSfDir(spark, sf0001, nc).vectors),
+      "PqQuant.forSfDir" -> (() => PqQuant.forSfDir(spark, sf0001, dim)._2),
+      "LshAnn.forSfDir" ->
+        (() => spark.read.parquet(LshAnn.forSfDir(spark, sf0001, dim))))
     try {
       val before = lakes.map { case (_, read) => read().inputFiles.toSet }
+      val stats = SqQuant.statsForSfDir(spark, sf0001, dim)
       Artifact.reset()
       lakes.zip(before).foreach { case ((name, read), old) =>
         val now = read().inputFiles.toSet
         assert(now.nonEmpty && now.intersect(old).isEmpty,
           s"$name served pre-reset files after reset")
       }
+      assert(SqQuant.statsForSfDir(spark, sf0001, dim)._1 ne stats._1,
+        "SqQuant served pre-reset stats after reset")
     } finally graft.CacheRegistry.release()
   }
 }

@@ -211,6 +211,19 @@ class IvfSpec extends SparkSpec {
     assert(loaded.vectors.count() == emb.count())
   }
 
+  test("load refuses a version dir whose -centroids sibling is missing") {
+    val dir = "target/ivf-test/no-centroids"
+    IvfIndex.build(spark, emb, dir, numClusters = 8)
+    val cents = new java.io.File(IvfIndex.centroidsDir(dir))
+    def rm(f: java.io.File): Unit = {
+      if (f.isDirectory) f.listFiles().foreach(rm); f.delete()
+    }
+    rm(cents)
+    assert(!cents.exists())
+    val err = intercept[Exception](IvfIndex.load(spark, dir))
+    assert(err.getMessage.contains(cents.getAbsolutePath), err.getMessage)
+  }
+
   test("mergeSegment: merged counts = base counts + assignNew histogram; " +
     "merged search at full probe ≡ exact over the union") {
     val dir = "target/ivf-test/merge"

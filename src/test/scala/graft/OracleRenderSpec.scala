@@ -70,9 +70,10 @@ class OracleRenderSpec extends SparkSpec {
     val one = SparkEntry.oracleSqlFor(spark, sfDir, Some(Set("q01_pricing_summary")))
     assert(one.keySet == Set("q01_pricing_summary"))
     assert(!Files.exists(exportDir), s"the render built an IVF index: $exportDir")
-    assert(!IvfIndex.tunedCache.keys.exists(_.startsWith(s"$sfDir#")),
+    val built = graft.sources.Artifact.memoKeys
+    assert(!built.exists(_.startsWith(s"ivf-tuned#$sfDir#")),
       "the render ran the nProbe tuner")
-    assert(!SparkEntry.dedupBlockK.contains(sfDir),
+    assert(!built.contains(s"dedup-blocks#$sfDir"),
       "the render counted the dedup blocks")
   }
 
